@@ -103,7 +103,8 @@ def _newest_prior_bench(repo):
     return max(benches.items())
 
 
-def _report_delta_vs_prior(result, spreads, secondary) -> None:
+def _report_delta_vs_prior(result, spreads, secondary,
+                           cpus: int | None = None) -> None:
     """Round-over-round adjudication ON THE RECORD (r9 verdict #2: the
     r9 artifact's +18% went unremarked and took a judge re-run to call as
     jitter).  Finds the newest BENCH_r{N}.json next to this script,
@@ -121,7 +122,12 @@ def _report_delta_vs_prior(result, spreads, secondary) -> None:
     measured spreads counted twice as a proxy for the prior round's),
     it's labeled within-noise; otherwise exceeds-spread, which a reader
     should treat as a real regression/improvement.  Favorable and adverse
-    deltas are printed identically."""
+    deltas are printed identically.
+
+    `cpus` is this run's core count.  A prior recorded on a different
+    core count (its artifact's top-level "cpus") is not a baseline: the
+    line reports both totals and "not comparable (P vs C cores)" instead
+    of a verdict.  With `cpus` unknown (None) no such check is made."""
     repo = os.path.dirname(os.path.abspath(__file__))
     prior = _newest_prior_bench(repo)
     if prior is None:
@@ -129,7 +135,8 @@ def _report_delta_vs_prior(result, spreads, secondary) -> None:
     n_prev, path = prior
     try:
         with open(path) as f:
-            prev = json.load(f).get("parsed") or {}
+            record = json.load(f)
+        prev = record.get("parsed") or {}
     except Exception:
         return
     prev_val = prev.get("value")
@@ -138,6 +145,11 @@ def _report_delta_vs_prior(result, spreads, secondary) -> None:
               file=sys.stderr)
         return
     cur = result["value"]
+    prev_cpus = record.get("cpus")
+    if cpus is not None and isinstance(prev_cpus, int) and prev_cpus != cpus:
+        print(f"# delta vs BENCH_r{n_prev}: primary {prev_val}->{cur}s "
+              f"not comparable ({prev_cpus} vs {cpus} cores)", file=sys.stderr)
+        return
     pct = 100.0 * (cur - prev_val) / prev_val
     # noise envelope: sum of per-query spreads, counted for both rounds
     envelope = 2.0 * sum(spreads.values())
@@ -313,7 +325,8 @@ def main() -> None:
     # (r11 ADVICE: a ZeroDivisionError here used to fire before the final
     # result JSON printed).
     try:
-        _report_delta_vs_prior(result, spreads, secondary)
+        _report_delta_vs_prior(result, spreads, secondary,
+                               cpus=spark.sparkContext.defaultParallelism)
     except Exception as exc:  # pragma: no cover - belt for unforeseen shapes
         print(f"# WARN delta reporter failed: {exc!r}", file=sys.stderr)
     if secondary is not None:

@@ -135,7 +135,8 @@ def bucket_histogram(docs, spark) -> dict:
     record a max-bucket-hit count)."""
     from pyspark.sql import functions as F
 
-    from tegallega_spark.operators.dedup import make_band_hash_udf, parallelize_for_udf
+    from tegallega_spark.operators.dedup import make_band_hash_udf
+    from tegallega_spark.session import parallelize_for_udf
 
     bh_udf = make_band_hash_udf(SHINGLE_N, 32, 16)
     banded = (
@@ -164,8 +165,8 @@ def unguarded_control(spark, k_spam: int) -> dict:
     from tegallega_spark.operators.dedup import (
         _pairs_from_band_hashes,
         make_band_hash_udf,
-        parallelize_for_udf,
     )
+    from tegallega_spark.session import parallelize_for_udf
     from pyspark.sql import functions as F
 
     docs = build_corpus(spark, k_spam, 0, 0)

@@ -18,128 +18,21 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
-from tegallega_spark.session import attach_intermediates
-
-
-# logical-plan node classes whose OUTPUT partitioning comes from a shuffle
-# (spark.sql.shuffle.partitions), not from file splits — the two regimes
-# parallelize_for_udf must tell apart.  Exact nodeName() matches, so plan
-# TEXT (literals, column names) can't false-positive.
-_SHUFFLE_NODE_NAMES = frozenset(
-    {
-        "Join",
-        "Aggregate",
-        "Window",
-        "Deduplicate",
-        "Repartition",
-        "RepartitionByExpression",
-        "Sort",
-        "Intersect",
-        "Except",
-        # ADVICE r9: SQL-authored DISTINCT keeps a Distinct node at
-        # analysis time (ReplaceDistinctWithAggregate runs later, in the
-        # optimizer), and applyInPandas/cogroup stages shuffle on their
-        # grouping keys — all three were misread as scan-rooted before.
-        "Distinct",
-        "FlatMapGroupsInPandas",
-        "FlatMapCoGroupsInPandas",
-    }
+from tegallega_spark.session import (
+    attach_intermediates,
+    parallelize_for_udf,
+    small_scan_input,
 )
 
 
-def _has_shuffle_origin_node(plan) -> bool:
-    """DFS over a py4j logical-plan TreeNode for shuffle-origin node
-    classes (early exit on first hit).  Subquery expressions are not
-    descended into — a shuffle buried in a scalar subquery doesn't set the
-    OUTER frame's partitioning, which is what the caller asks about."""
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() in _SHUFFLE_NODE_NAMES:
-            return True
-        children = node.children()
-        for i in range(children.length()):
-            stack.append(children.apply(i))
-    return False
-
-
-def parallelize_for_udf(df: DataFrame) -> DataFrame:
-    """Match partition count to cluster parallelism before a CPU-bound
-    Arrow-UDF stage.
-
-    A small parquet input splits into fewer partitions than cores (split
-    size is byte-based), and AQE coalesces tiny shuffles to one partition —
-    both right for IO-bound stages but wrong before a Python stage
-    whose cost is CPU per row: the UDF then runs 1-2-way on a 32-core
-    machine.  Repartitioning a few MB is free; at 100 TB the scan yields
-    far more splits than cores and this is a no-op.
-
-    r7: the probe no longer touches df.rdd.  Materializing the Python RDD
-    runs the FULL Catalyst optimizer over the upstream plan just to read a
-    partition count — on the composed clean_corpus program the profiler
-    measured five such deep-prefix optimizations at ~43 s of the 5 k race's
-    65 s, each thrown away because the repartition returns a new plan that
-    re-optimizes from scratch.  Instead, read sizeInBytes off the ANALYZED
-    plan's stats (a plan-tree visitor walk — no optimization, no physical
-    planning): the scan's partition count is ~size/maxPartitionBytes, so
-    `size < cores × maxPartitionBytes` is exactly the "fewer splits than
-    cores" condition the old probe detected, at microsecond cost.  Inputs
-    estimated larger keep their (already >= cores) scan/shuffle
-    partitioning; the estimate only steers a perf heuristic, so an
-    over-estimate merely skips an optional repartition.
-
-    r8: the size-vs-split formula only holds for SCAN-rooted lineage —
-    analyzed-plan stats multiply child sizes through joins and ignore
-    filters, so a genuinely tiny post-join/post-aggregate frame could be
-    estimated over threshold and skip the repartition, running the UDF
-    1-2-way (the exact pathology this function prevents).  A plan that
-    already contains a shuffle-origin node (join / aggregate / window /
-    repartition / sort / dedup) is partitioned by
-    spark.sql.shuffle.partitions, not by file splits — for those, compare
-    THAT width against cluster parallelism instead (matching what the
-    pre-r7 df.rdd probe reported for such plans).
-
-    r9 (ADVICE): the shuffle-node check walks the logical tree's nodeName()s
-    via py4j instead of regexing the rendered plan string — a query literal
-    or column name containing 'Sort'/'Window'/'Join' (e.g. a filter on
-    F.lit("Sort code")) false-positived the string match, routing a tiny
-    scan-rooted frame down the shuffle branch where shuffle_parts >= target
-    skips the widening repartition.  The walk is O(nodes) py4j calls with
-    early exit — tens of ms on the deepest composed plans, once per UDF
-    stage.
-    """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    analyzed = df._jdf.queryExecution().analyzed()
-    if _has_shuffle_origin_node(analyzed):
-        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        if shuffle_parts < target:
-            return df.repartition(target)
-        return df
-    max_split = int(
-        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    )
-    size = int(str(analyzed.stats().sizeInBytes()))
-    if size < target * max_split:
-        return df.repartition(target)
-    return df
-
-
 # ---------------------------------------------------------------------------
-# Exact dedup
+# Keyed dedup
 # ---------------------------------------------------------------------------
-
-def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal (hash-groupBy under the hood)."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
 
 def dedup_keep_first(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
     """First occurrence per key wins, 'first' defined by order_col ascending
@@ -236,11 +129,6 @@ def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 32) -> Colum
         a, b = _ab(i)
         sig_cols.append(F.array_min(F.transform(hashes, _perm(a, b))))
     return F.array(*sig_cols)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature straight from shingles (convenience wrapper)."""
-    return minhash_signature_from_hashes(shingle_hashes(shingles), num_hashes)
 
 
 def _perm_constants(num_hashes: int) -> tuple[list[int], list[int]]:
@@ -845,8 +733,8 @@ def minhash_near_duplicates_verified(
     recomputed for the (typically tiny) candidate subset only.
 
     single_task: None (default) auto-gates the fused EXACT-semantics shape
-    (max_bucket=None, no remediation) — a SCAN-rooted input under
-    SMALL_PAIRGEN_BYTES runs the whole LSH+verify in one executor task
+    (max_bucket=None, no remediation) — when session.small_scan_input(df)
+    holds, the whole LSH+verify runs in one executor task
     (_single_task_minhash_verified, one job); shuffle-origin or large
     inputs keep the distributed shape.  True forces it (valid only
     without max_bucket); False forces distributed."""
@@ -869,10 +757,7 @@ def minhash_near_duplicates_verified(
             and max_bucket is None
             and not remediate_dropped
         ):
-            analyzed = df._jdf.queryExecution().analyzed()
-            single_task = (not _has_shuffle_origin_node(analyzed)) and int(
-                str(analyzed.stats().sizeInBytes())
-            ) < SMALL_PAIRGEN_BYTES
+            single_task = small_scan_input(df)
         if single_task:
             return _single_task_minhash_verified(
                 df, id_col, text_col, shingle_n, num_hashes, bands,
@@ -1298,11 +1183,6 @@ def minhash_near_duplicates_mllib(
 # Exact shingle-Jaccard pairs + decontamination (training-data hygiene)
 # ---------------------------------------------------------------------------
 
-SMALL_PAIRGEN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_PAIRGEN_BYTES", str(32 * 1024 * 1024))
-)
-
-
 def _single_task_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -1415,20 +1295,16 @@ def exact_shingle_jaccard_pairs(
     pair-discriminating signal, so at sane N the reported Jaccard barely
     moves (test-pinned).  Default None = exact classic semantics.
 
-    `single_task`: None (default) auto-gates — a SCAN-rooted input whose
-    analyzed-plan size estimate is under SMALL_PAIRGEN_BYTES runs the
-    whole computation in one executor task (_single_task_jaccard_pairs,
-    one job; the cc.py small-graph discipline applied to pair
-    generation).  Shuffle-origin inputs (post-join/filter frames, whose
+    `single_task`: None (default) auto-gates — when
+    session.small_scan_input(df) holds, the whole computation runs in
+    one executor task (_single_task_jaccard_pairs, one job; the cc.py
+    small-graph discipline applied to pair generation).  Shuffle-origin inputs (post-join/filter frames, whose
     estimates are unreliable upward) and large corpora always take the
     distributed shape below.  True/False force the choice (tests pin
     both shapes and their parity).
     """
     if single_task is None:
-        analyzed = df._jdf.queryExecution().analyzed()
-        single_task = (not _has_shuffle_origin_node(analyzed)) and int(
-            str(analyzed.stats().sizeInBytes())
-        ) < SMALL_PAIRGEN_BYTES
+        single_task = small_scan_input(df)
     if single_task:
         return _single_task_jaccard_pairs(
             df, id_col, text_col, shingle_n, threshold, max_df

@@ -25,23 +25,16 @@ Nothing quadratic, nothing driver-side except the scalar V.
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from tegallega_spark.session import parallelize_for_udf, small_scan_input
+
 __all__ = ["BigramLM", "train_bigram_lm", "perplexity_score"]
 
 UNK = "<unk>"
-
-# Self-scoring corpora whose analyzed-plan size estimate is under this run
-# the whole train+score COUNTING pass in one executor task (the cc.py /
-# pair-gen small-input discipline).  At 100 TB the gate never fires.
-SMALL_LM_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_LM_BYTES", str(32 * 1024 * 1024))
-)
-
 
 class BigramLM(NamedTuple):
     """bigrams: (w1, w2, c12); contexts: (w1, c1); vocab: (word,);
@@ -82,8 +75,6 @@ def _token_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     trade the fused MinHash path documents for its shingle arrays.
     parallelize_for_udf widens the split to cluster parallelism when the
     scan is byte-split narrower than the core count (no-op at scale)."""
-    from tegallega_spark.operators.dedup import parallelize_for_udf
-
     toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     return parallelize_for_udf(df).select(
         F.col(id_col).alias("__id"), toks.alias("__t")
@@ -273,23 +264,15 @@ def train_bigram_lm(
     single_task: None (default) auto-gates the small-input single-task
     SELF-scoring profile (see below); True/False force it (tests pin both
     shapes; plan-shape tests force False to audit the scale plan)."""
-    # small-input single-task profile, decided ONCE here: a scan-rooted
-    # corpus under SMALL_LM_BYTES will be SELF-scored in one executor
+    # small-input single-task profile, decided ONCE here: a corpus that
+    # passes session.small_scan_input will be SELF-scored in one executor
     # task (perplexity_score), so the distributed model frames below are
     # never executed — skip their persist registrations and the UDF-
     # widening plan probes, which are pure driver-side py4j cost at this
     # scale (measured ~0.45 s of q56's plan build).  A caller that
     # cross-scores a DIFFERENT frame against a gated model still gets
     # correct results (the lazy frames recompute per consumer).
-    if single_task is None:
-        from tegallega_spark.operators.dedup import _has_shuffle_origin_node
-
-        analyzed = df._jdf.queryExecution().analyzed()
-        small_gate = (not _has_shuffle_origin_node(analyzed)) and int(
-            str(analyzed.stats().sizeInBytes())
-        ) < SMALL_LM_BYTES
-    else:
-        small_gate = bool(single_task)
+    small_gate = small_scan_input(df) if single_task is None else bool(single_task)
     # tokenize ONCE into stored arrays (persisted): the vocab count and
     # the bigram derivation both read the cached arrays instead of each
     # re-running the regex split over the corpus

@@ -14,12 +14,12 @@ North-star extension (BASELINE.json): approximate-nearest-neighbor over the
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
+
+from tegallega_spark.session import attach_intermediates, small_scan_input
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -194,23 +194,11 @@ class _BroadcastHandle:
         return self
 
 
-# Vector tables whose analyzed-plan estimate is under this broadcast the
-# (id -> vector) matrix into the rescore UDF instead of joining the raw
-# vectors onto the candidate pairs (guide-§8 "move heavy bytes once":
-# at weak LSH parameters the candidate set approaches all-pairs, and the
-# two id-equi-joins were shuffling ~2 GB of vector payload per run at
-# bench scale).  At 100 TB the gate never fires and the joins stay.
-SMALL_VEC_BROADCAST_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_VEC_BROADCAST_BYTES", str(32 * 1024 * 1024))
-)
-
 # Row-count bound for the one-task all-pairs profile: the in-task
-# candidate mask is n² bools (16 MB at the default), and the worst-case
-# pair enumeration is n²/2 — quadratic in rows, so this gate is a ROW
-# bound on top of the byte gate above.
-SMALL_ALLPAIRS_TASK_N = int(
-    os.environ.get("SPARK_GRAFT_SMALL_ALLPAIRS_TASK_N", "4096")
-)
+# candidate mask is n² bools (16 MB at 4096), and the worst-case pair
+# enumeration is n²/2 — quadratic in rows, so this gate is a ROW bound on
+# top of the small_scan_input byte gate.
+SMALL_ALLPAIRS_TASK_N = 4096
 
 
 def _single_task_all_pairs(
@@ -307,8 +295,6 @@ def _single_task_all_pairs(
 
     trigger = spark.range(1).coalesce(1)
     out = trigger.mapInPandas(fn, schema)
-    from tegallega_spark.session import attach_intermediates
-
     return attach_intermediates(out, _BroadcastHandle(bcast))
 
 
@@ -346,17 +332,10 @@ def all_pairs_above(
     shape used (duplicate ids need join semantics).  The 32 MB byte gate
     reads the ANALYZED-plan estimate (compressed scan bytes), which can
     understate the decoded float64 footprint several-fold — at the
-    default gate the decoded matrix is still ≤ a few hundred MB, within
-    broadcast practice; lower SPARK_GRAFT_SMALL_VEC_BROADCAST_BYTES if
-    executors are memory-tight."""
+    32 MiB gate the decoded matrix is still ≤ a few hundred MB, within
+    broadcast practice."""
     if broadcast_rescore is None:
-        from tegallega_spark.operators.dedup import _has_shuffle_origin_node
-
-        analyzed = df._jdf.queryExecution().analyzed()
-        broadcast_rescore = (not _has_shuffle_origin_node(analyzed)) and int(
-            str(analyzed.stats().sizeInBytes())
-        ) < SMALL_VEC_BROADCAST_BYTES
-    from tegallega_spark.session import attach_intermediates
+        broadcast_rescore = small_scan_input(df)
 
     if broadcast_rescore:
         import numpy as np

@@ -138,92 +138,6 @@ def polyline_arrays(vertices: DataFrame, key: str = "relation_id") -> DataFrame:
     )
 
 
-def _projection_fold(verts, plon, plat, frac_from_vertex_idx: bool = False):
-    """Point-to-polyline projection as ONE strict-less F.aggregate scan
-    over consecutive vertex pairs of the `verts` array — the same
-    formulas in the same order as the row form project_onto_segments, so
-    the result struct (proj_dist_m, frac_idx, proj_lon, proj_lat) is
-    bit-identical to the row form's struct-min (keep-only-when-strictly-
-    closer reproduces the first-win tie-break on the LOWEST segment
-    index; the extract race asserts output identity vs the node
-    reference).
-
-    frac_from_vertex_idx: frac_idx = verts[i].vertex_idx + t (the row
-    form's seg_idx units, for callers whose vertex indices may be
-    non-contiguous — requires a `vertex_idx` field on the structs);
-    default is the array position i + t (polyline_arrays form, where the
-    two coincide)."""
-
-    def seg_step(acc, i):
-        a = F.element_at(verts, i + 1)
-        b = F.element_at(verts, i + 2)
-        ax, ay, bx, by = a["lon"], a["lat"], b["lon"], b["lat"]
-        apx = plon - ax
-        apy = plat - ay
-        abx = bx - ax
-        aby = by - ay
-        ab2 = abx * abx + aby * aby
-        t = F.when(
-            ab2 > 0,
-            F.least(F.greatest((apx * abx + apy * aby) / ab2, F.lit(0.0)), F.lit(1.0)),
-        ).otherwise(F.lit(0.0))
-        px = lerp(ax, bx, t)
-        py = lerp(ay, by, t)
-        d = haversine_m(plon, plat, px, py)
-        frac = (
-            (a["vertex_idx"] + t) if frac_from_vertex_idx else (i.cast("double") + t)
-        )
-        cand = F.struct(
-            d.alias("proj_dist_m"),
-            frac.alias("frac_idx"),
-            px.alias("proj_lon"),
-            py.alias("proj_lat"),
-        )
-        return F.when(d < acc["proj_dist_m"], cand).otherwise(acc)
-
-    return F.aggregate(
-        F.sequence(F.lit(0), F.size(verts) - 2),
-        F.struct(
-            F.lit(float("inf")).alias("proj_dist_m"),
-            F.lit(0.0).alias("frac_idx"),
-            F.lit(0.0).alias("proj_lon"),
-            F.lit(0.0).alias("proj_lat"),
-        ),
-        seg_step,
-    )
-
-
-def project_onto_polyline(
-    points: DataFrame,
-    polylines: DataFrame,
-    key: str = "relation_id",
-    point_id: str = "stop_id",
-) -> DataFrame:
-    """project_onto_segments semantics (update-routes.js:206-246) over the
-    polyline ARRAY form — identical formulas in identical order, evaluated
-    JVM-side inside one F.aggregate scan per point, so the output is
-    bit-identical to the row-explosion form while shuffling only the
-    1-row-per-key polyline join.
-
-    The scan keeps a candidate only when strictly closer (d < best), which
-    reproduces the reference's first-win tie-break on the LOWEST segment
-    index (js:235-239) — the same ordering the row form's struct-min
-    encodes.  Points on polylines with < 2 vertices are dropped, matching
-    the row form's inner segment join."""
-    j = points.alias("pt").join(polylines.alias("pl"), key)
-    best = _projection_fold(F.col("pl.verts"), F.col("pt.lon"), F.col("pt.lat"))
-    return (
-        j.filter(F.size(verts) >= 2)
-        .select(
-            key,
-            F.col(f"pt.{point_id}").alias(point_id),
-            best.alias("__b"),
-        )
-        .select(key, point_id, "__b.frac_idx", "__b.proj_lon", "__b.proj_lat",
-                "__b.proj_dist_m")
-    )
-
-
 def interpolate_virtual_stops_along_polyline(
     real_stops: DataFrame,
     polylines: DataFrame,
@@ -231,12 +145,19 @@ def interpolate_virtual_stops_along_polyline(
     order_col: str = "member_order",
     max_gap_km: float = 0.25,
 ) -> DataFrame:
-    """interpolate_virtual_stops_along_line semantics (W10,
-    update-routes.js:281-333) over the polyline ARRAY form: the lag-pair
-    and explode(sequence) stay (they run over the small stops frame), but
-    the two per-vertex equi-joins become element_at lookups into the
-    joined array — no vertex-row shuffle.  Bounds filter __ci ∈
-    [0, len-2] matches the row form's inner joins (js:302)."""
+    """Reference-faithful W10 (update-routes.js:281-333) over the polyline
+    ARRAY form: between each pair of CONSECUTIVE real stops (member
+    order), when their straight-line distance exceeds max_gap_km, insert
+    ⌊d/max_gap⌋ stops evenly spaced in FRACTIONAL-INDEX space and
+    interpolated along the route polyline.
+
+    real_stops must carry (key, order_col, lon, lat, frac_idx); polylines
+    come from polyline_arrays.  The lag-pair and explode(sequence) run over
+    the small stops frame; the segment endpoints are element_at lookups
+    into the joined array — no vertex-row shuffle.  The gap is computed
+    in meters then divided by 1000, mirroring the reference's arithmetic
+    (js:290).  Rows whose coordIdx falls outside [0, len-2] are dropped
+    (js:302)."""
     w = Window.partitionBy(key).orderBy(order_col)
     paired = (
         real_stops.withColumn("nlon", F.lead("lon").over(w))
@@ -283,8 +204,9 @@ def drop_near_real_arr(
     key: str = "relation_id",
     max_dist_m: float = 150.0,
 ) -> DataFrame:
-    """drop_near_real semantics (J5, update-routes.js:311-313) without the
-    theta anti-join: the real stops aggregate to one coordinate array per
+    """Drop a virtual stop if any real stop of the same route lies within
+    max_dist_m (J5, update-routes.js:311-313), without a theta anti-join:
+    the real stops aggregate to one coordinate array per
     key, and each virtual stop filters on F.exists over that array — one
     small groupBy plus a 1-row-per-key join.  Inner join is equivalent to
     the anti join here because every virtual stop's relation has real
@@ -469,83 +391,6 @@ def slice_path_geojson(
             }
         )
     return {"type": "FeatureCollection", "features": features}
-
-
-def drop_near_real(
-    virtual: DataFrame,
-    real: DataFrame,
-    key: str = "relation_id",
-    max_dist_m: float = 150.0,
-) -> DataFrame:
-    """Distance-predicate anti join: drop a virtual stop if any real stop of
-    the same route lies within max_dist_m (reference update-routes.js:311-313)."""
-    cond = (
-        (virtual[key] == real[key])
-        & (haversine_m(virtual["lon"], virtual["lat"], real["lon"], real["lat"]) < max_dist_m)
-    )
-    return virtual.join(real, cond, "left_anti")
-
-
-def interpolate_virtual_stops_along_line(
-    real_stops: DataFrame,
-    vertices: DataFrame,
-    key: str = "relation_id",
-    order_col: str = "member_order",
-    max_gap_km: float = 0.25,
-) -> DataFrame:
-    """Reference-faithful W10 (update-routes.js:281-333): between each pair
-    of CONSECUTIVE real stops (member order), when their straight-line
-    distance exceeds max_gap_km, insert ⌊d/max_gap⌋ stops evenly spaced in
-    FRACTIONAL-INDEX space and interpolated along the route polyline.
-
-    real_stops must carry (key, order_col, lon, lat, frac_idx);
-    vertices must carry (key, vertex_idx, lon, lat).
-
-    lag-pair → explode(sequence) → join segment vertices on
-    (key, floor(idx)) — two equi-joins, no UDF.  Rows whose coordIdx falls
-    outside [0, len-2] are dropped (js:302).
-    """
-    w = Window.partitionBy(key).orderBy(order_col)
-    paired = (
-        real_stops.withColumn("nlon", F.lead("lon").over(w))
-        .withColumn("nlat", F.lead("lat").over(w))
-        .withColumn("nidx", F.lead("frac_idx").over(w))
-        .filter(F.col("nlon").isNotNull())
-    )
-    # the reference computes meters then divides by 1000 (js:290) — mirror
-    # that arithmetic exactly rather than using the km-radius variant
-    gap_km = haversine_m(F.col("lon"), F.col("lat"), F.col("nlon"), F.col("nlat")) / 1000.0
-    paired = (
-        paired.withColumn("__gap", gap_km)
-        .filter(F.col("__gap") > max_gap_km)
-        .withColumn("__n", F.floor(F.col("__gap") / max_gap_km).cast("int"))
-        .withColumn("__step", (F.col("nidx") - F.col("frac_idx")) / (F.col("__n") + 1))
-    )
-    exploded = paired.select(
-        key, "frac_idx", "__step",
-        F.explode(F.sequence(F.lit(1), F.col("__n"))).alias("__k"),
-    )
-    idx = F.col("frac_idx") + F.col("__k") * F.col("__step")
-    pts = exploded.select(
-        key,
-        idx.alias("__idx"),
-        F.floor(idx).cast("int").alias("__ci"),
-        (idx - F.floor(idx)).alias("__t"),
-    ).filter(F.col("__ci") >= 0)
-    v1 = vertices.select(key, F.col("vertex_idx").alias("__ci"),
-                         F.col("lon").alias("ax"), F.col("lat").alias("ay"))
-    v2 = vertices.select(key, (F.col("vertex_idx") - 1).alias("__ci"),
-                         F.col("lon").alias("bx"), F.col("lat").alias("by"))
-    joined = pts.join(v1, [key, "__ci"]).join(v2, [key, "__ci"])  # inner → ci+1 exists
-    vlon = lerp(F.col("ax"), F.col("bx"), F.col("__t"))
-    vlat = lerp(F.col("ay"), F.col("by"), F.col("__t"))
-    return joined.select(
-        key,
-        virtual_stop_id(vlon, vlat).alias("stop_id"),
-        vlon.alias("lon"),
-        vlat.alias("lat"),
-        F.lit(False).alias("is_real"),
-    )
 
 
 def interpolate_virtual_stops(

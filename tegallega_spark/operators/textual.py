@@ -15,6 +15,12 @@ import pandas as pd  # noqa: F401 — resolved by pandas_udf type-hint inference
 from pyspark.sql import Column, DataFrame, Window
 import pyspark.sql.functions as F
 
+from tegallega_spark.session import (
+    parallelize_for_udf,
+    plan_size_bytes,
+    small_scan_input,
+)
+
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
 # Deliberately small: language ID here is a deterministic heuristic, not a
 # model — mirrors fastText-style scoring with hand-rolled features.
@@ -383,7 +389,7 @@ def repetition_stats(
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from tegallega_spark.operators.dedup import _mix_constants, parallelize_for_udf
+    from tegallega_spark.operators.dedup import _mix_constants
 
     token_re = re.compile(r"[^a-z0-9]+")
     coef = np.array(_mix_constants(n, stream=0x9311), dtype=np.uint64)
@@ -512,8 +518,6 @@ def chunk_documents(
                 {id_col: ids, "chunk_idx": idxs, "n_tokens": lens,
                  "chunk_text": texts}
             )
-
-    from tegallega_spark.operators.dedup import parallelize_for_udf
 
     return parallelize_for_udf(df.select(id_col, text_col)).mapInPandas(
         chunk, schema=schema
@@ -770,8 +774,6 @@ def _token_shingle_positions(
 ) -> DataFrame:
     """(doc, token position, hash of the k-token shingle starting there).
     Whitespace tokens; a doc shorter than k tokens emits nothing."""
-    from tegallega_spark.operators.dedup import parallelize_for_udf
-
     sh = _span_shingle_udf(k)
     return parallelize_for_udf(df).select(
         F.col(id_col).alias("__doc"),
@@ -981,22 +983,14 @@ def duplicated_spans(
     interval merge is the classic running-max window per doc, JVM-side.
     Nothing persists, so there is nothing for callers to release.
 
-    single_task: None (default) auto-gates — a SCAN-rooted input whose
-    analyzed-plan estimate is under dedup.SMALL_PAIRGEN_BYTES runs the
-    whole computation in one executor task (_single_task_duplicated_spans,
+    single_task: None (default) auto-gates — when
+    session.small_scan_input(df) holds, the whole computation runs in
+    one executor task (_single_task_duplicated_spans,
     one job — every quantity here is an integer, so the result is exactly
     the distributed one); True/False force the shape (tests pin both).
     """
     if single_task is None:
-        from tegallega_spark.operators.dedup import (
-            SMALL_PAIRGEN_BYTES,
-            _has_shuffle_origin_node,
-        )
-
-        analyzed = df._jdf.queryExecution().analyzed()
-        single_task = (not _has_shuffle_origin_node(analyzed)) and int(
-            str(analyzed.stats().sizeInBytes())
-        ) < SMALL_PAIRGEN_BYTES
+        single_task = small_scan_input(df)
     if single_task:
         return _single_task_duplicated_spans(
             df, id_col, text_col, k, min_count, keep_first
@@ -1013,8 +1007,6 @@ def duplicated_spans(
     # number instead, which stays AQE-coalescible (a numbered user
     # repartition is exempt from coalescing): measured 1.63 s → 0.65 s
     # at sf0.1 where the whole shingle frame is ~6 MB.
-    from tegallega_spark.session import plan_size_bytes
-
     spark = df.sparkSession
     est_shuffle_bytes = plan_size_bytes(df) * 64
     n_parts = est_shuffle_bytes // (16 << 20) + 1

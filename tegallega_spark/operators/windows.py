@@ -39,28 +39,6 @@ def cumulative_shape_distance(
     )
 
 
-def segment_travel_times(
-    stops: DataFrame,
-    key: str = "relation_id",
-    order_col: str = "stop_order",
-    dist_col: str = "shape_dist",
-) -> DataFrame:
-    """Per consecutive stop gap: dist=max(gap, 0.01) km, speed 30 km/h if
-    ≤5 km else 55, time=dist/speed*3600; cumulative travel time per route
-    (reference generate_gtfs.py:373-387: W4+W5)."""
-    w = Window.partitionBy(key).orderBy(order_col)
-    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = F.col(dist_col) - F.coalesce(F.lag(dist_col).over(w), F.col(dist_col))
-    dist = F.greatest(gap, F.lit(0.01))
-    speed = F.when(dist <= 5.0, F.lit(30.0)).otherwise(F.lit(55.0))
-    seg_time = F.when(
-        F.lag(dist_col).over(w).isNull(), F.lit(0.0)
-    ).otherwise(dist / speed * 3600.0)
-    return stops.withColumn("seg_time_s", seg_time).withColumn(
-        "cum_time_s", F.sum("seg_time_s").over(frame)
-    )
-
-
 def headway_trip_starts(
     routes: DataFrame,
     first_col: str = "first_sec",
@@ -79,24 +57,3 @@ def headway_trip_starts(
         "trip_start_sec",
         F.bround(F.col(first_col) + F.col("trip_idx") * headway).cast("long"),
     )
-
-
-def sessionize(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Batch sessionization: lag(ts) → new-session flag on gap>threshold →
-    cumulative sum = session id.  The standard two-window formulation."""
-    w = Window.partitionBy(key).orderBy(ts_col)
-    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # unix_timestamp handles TIMESTAMP and TIMESTAMP_NTZ alike; cast("long")
-    # on NTZ is an ANSI type error under Spark 4.
-    gap = F.unix_timestamp(F.col(ts_col)) - F.lag(
-        F.unix_timestamp(F.col(ts_col))
-    ).over(w)
-    new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    return events.withColumn("__new", new_sess).withColumn(
-        "session_id", F.sum("__new").over(frame)
-    ).drop("__new")

@@ -85,11 +85,11 @@ class _StageBoundaryDirHandle:
 
 
 def _auto_stage_boundary_dir(docs: DataFrame) -> tuple[str | None, object]:
-    """Size-gated default for `stage_boundary_dir` (same pattern as
-    aqe_off_for_small_input: estimate the input with Catalyst's analyzed
-    sizeInBytes, compare against the environment, no-op outside the
-    regime).  Returns (dir_or_None, release_handle_or_None); the dir is a
-    fresh temp directory owned by the returned handle.
+    """Size-gated default for `stage_boundary_dir`: the input's
+    plan_size_bytes estimate projects the spill, which is compared
+    against free temp-disk space; no-op outside that regime.  Returns
+    (dir_or_None, release_handle_or_None); the dir is a fresh temp
+    directory owned by the returned handle.
 
     TEGALLEGA_STAGE_BOUNDARY overrides: 'off'/'0'/'never' disables,
     'always'/'1'/'on' forces, anything else (default 'auto') gates on
@@ -106,7 +106,7 @@ def _auto_stage_boundary_dir(docs: DataFrame) -> tuple[str | None, object]:
             size = plan_size_bytes(docs)
             # _SPILL_FACTOR was calibrated against zstd-parquet scan
             # bytes; in-memory roots (createDataFrame → LocalRelation /
-            # LogicalRDD) report sizeInBytes ~17× below that calibration
+            # LogicalRDD) report a size estimate ~17× below that calibration
             # (measured in the r10 stress harness), so without a
             # correction the ENOSPC gate silently stays off in exactly
             # the regime it protects (r10 ADVICE).  16× multiplier when

@@ -52,7 +52,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
-from tegallega_spark.session import load_table
+from tegallega_spark.session import load_table, parallelize_for_udf, plan_size_bytes
 from tegallega_spark.functions.geo import haversine_km
 from tegallega_spark.functions.timecodec import seconds_to_hhmmss
 from tegallega_spark.operators import cc as CC
@@ -1379,6 +1379,10 @@ def q40(spark, sf_dir):
     return d.select("doc_id", TXT.quality_score(F.col("text")).alias("quality"))
 
 
+# Per-task scan-byte budget for q41's thinning exchange (see q41).
+THIN_TASK_BYTES = 64 << 20
+
+
 @register(
     "q41_stateful_thinning",
     oracle=r"""
@@ -1456,13 +1460,8 @@ def q41(spark, sf_dir):
     # conservative-huge analyzer estimate (only join/union-derived
     # lineage produces those; this input is scan-rooted) falls back to
     # the admin-set shuffle width rather than trusting it.
-    import os
-
-    from tegallega_spark.session import plan_size_bytes
-
     dp = spark.sparkContext.defaultParallelism
-    task_bytes = int(os.environ.get("SPARK_GRAFT_THIN_TASK_BYTES", str(64 << 20)))
-    n_parts = plan_size_bytes(e) // task_bytes + 1
+    n_parts = plan_size_bytes(e) // THIN_TASK_BYTES + 1
     if n_parts <= dp:
         n_parts = dp
     elif n_parts > (1 << 21):  # estimate not credible (Long.Max-ish)
@@ -1983,7 +1982,7 @@ def q54(spark, sf_dir):
     # widen the CPU-bound demux stage to cluster parallelism: the tiny
     # parquet scan yields ~2 splits, which would run the per-frame JPEG
     # decode 2-way on a 32-core session (guide §2.6)
-    d = D.parallelize_for_udf(T(spark, sf_dir, "documents").select("doc_id")).select(
+    d = parallelize_for_udf(T(spark, sf_dir, "documents").select("doc_id")).select(
         "doc_id", to_avi(F.col("doc_id")).alias("payload")
     )
     return MM.decode_batches(d).select(
@@ -3254,7 +3253,7 @@ def q74(spark, sf_dir):
         return pd.Series([variants[int(i) % 3] for i in ids])
 
     # widen the CPU-bound demux stage to cluster parallelism (see q54)
-    d = D.parallelize_for_udf(T(spark, sf_dir, "documents").select("doc_id")).select(
+    d = parallelize_for_udf(T(spark, sf_dir, "documents").select("doc_id")).select(
         "doc_id", to_mov(F.col("doc_id")).alias("payload")
     )
     return MM.decode_batches(d).select(

@@ -22,7 +22,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve via
 # get_type_hints against module globals (PEP 563 strings under
 # `from __future__ import annotations`)
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_mem() -> str:
@@ -164,6 +164,132 @@ def plan_size_bytes(df) -> int:
     return int(str(df._jdf.queryExecution().analyzed().stats().sizeInBytes()))
 
 
+# Analyzed-plan estimate under which a scan-rooted input counts as small
+# (small_scan_input).
+SMALL_INPUT_BYTES = 32 << 20
+
+
+# logical-plan node classes whose OUTPUT partitioning comes from a shuffle
+# (spark.sql.shuffle.partitions), not from file splits — the two regimes
+# small_scan_input and parallelize_for_udf must tell apart.  Exact nodeName() matches, so plan
+# TEXT (literals, column names) can't false-positive.
+_SHUFFLE_NODE_NAMES = frozenset(
+    {
+        "Join",
+        "Aggregate",
+        "Window",
+        "Deduplicate",
+        "Repartition",
+        "RepartitionByExpression",
+        "Sort",
+        "Intersect",
+        "Except",
+        # ADVICE r9: SQL-authored DISTINCT keeps a Distinct node at
+        # analysis time (ReplaceDistinctWithAggregate runs later, in the
+        # optimizer), and applyInPandas/cogroup stages shuffle on their
+        # grouping keys — all three were misread as scan-rooted before.
+        "Distinct",
+        "FlatMapGroupsInPandas",
+        "FlatMapCoGroupsInPandas",
+    }
+)
+
+
+def _has_shuffle_origin_node(plan) -> bool:
+    """DFS over a py4j logical-plan TreeNode for shuffle-origin node
+    classes (early exit on first hit).  Subquery expressions are not
+    descended into — a shuffle buried in a scalar subquery doesn't set the
+    OUTER frame's partitioning, which is what the caller asks about."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _SHUFFLE_NODE_NAMES:
+            return True
+        children = node.children()
+        for i in range(children.length()):
+            stack.append(children.apply(i))
+    return False
+
+
+def small_scan_input(df: DataFrame) -> bool:
+    """The one small-input shape policy: True when `df` is scan-rooted
+    (no shuffle-origin node in its analyzed plan) and its plan_size_bytes
+    estimate is under SMALL_INPUT_BYTES.  Every auto-gated operator (LM
+    self-scoring, verified MinHash, shingle-Jaccard pairs, duplicated
+    spans, the embedding-pair vector broadcast) takes its single-task /
+    broadcast shape exactly when this holds.
+
+    Shuffle-origin inputs always answer False: analyzed-plan stats
+    multiply child sizes through joins and ignore filters, so their
+    estimates are unreliable upward, and their partitioning already
+    comes from the shuffle width.  At 100 TB the gate never fires."""
+    analyzed = df._jdf.queryExecution().analyzed()
+    return (not _has_shuffle_origin_node(analyzed)) and (
+        plan_size_bytes(df) < SMALL_INPUT_BYTES
+    )
+
+
+def parallelize_for_udf(df: DataFrame) -> DataFrame:
+    """Match partition count to cluster parallelism before a CPU-bound
+    Arrow-UDF stage.
+
+    A small parquet input splits into fewer partitions than cores (split
+    size is byte-based), and AQE coalesces tiny shuffles to one partition —
+    both right for IO-bound stages but wrong before a Python stage
+    whose cost is CPU per row: the UDF then runs 1-2-way on a 32-core
+    machine.  Repartitioning a few MB is free; at 100 TB the scan yields
+    far more splits than cores and this is a no-op.
+
+    r7: the probe no longer touches df.rdd.  Materializing the Python RDD
+    runs the FULL Catalyst optimizer over the upstream plan just to read a
+    partition count — on the composed clean_corpus program the profiler
+    measured five such deep-prefix optimizations at ~43 s of the 5 k race's
+    65 s, each thrown away because the repartition returns a new plan that
+    re-optimizes from scratch.  Instead, read sizeInBytes off the ANALYZED
+    plan's stats (a plan-tree visitor walk — no optimization, no physical
+    planning): the scan's partition count is ~size/maxPartitionBytes, so
+    `size < cores × maxPartitionBytes` is exactly the "fewer splits than
+    cores" condition the old probe detected, at microsecond cost.  Inputs
+    estimated larger keep their (already >= cores) scan/shuffle
+    partitioning; the estimate only steers a perf heuristic, so an
+    over-estimate merely skips an optional repartition.
+
+    r8: the size-vs-split formula only holds for SCAN-rooted lineage —
+    analyzed-plan stats multiply child sizes through joins and ignore
+    filters, so a genuinely tiny post-join/post-aggregate frame could be
+    estimated over threshold and skip the repartition, running the UDF
+    1-2-way (the exact pathology this function prevents).  A plan that
+    already contains a shuffle-origin node (join / aggregate / window /
+    repartition / sort / dedup) is partitioned by
+    spark.sql.shuffle.partitions, not by file splits — for those, compare
+    THAT width against cluster parallelism instead (matching what the
+    pre-r7 df.rdd probe reported for such plans).
+
+    r9 (ADVICE): the shuffle-node check walks the logical tree's nodeName()s
+    via py4j instead of regexing the rendered plan string — a query literal
+    or column name containing 'Sort'/'Window'/'Join' (e.g. a filter on
+    F.lit("Sort code")) false-positived the string match, routing a tiny
+    scan-rooted frame down the shuffle branch where shuffle_parts >= target
+    skips the widening repartition.  The walk is O(nodes) py4j calls with
+    early exit — tens of ms on the deepest composed plans, once per UDF
+    stage.
+    """
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    analyzed = df._jdf.queryExecution().analyzed()
+    if _has_shuffle_origin_node(analyzed):
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        if shuffle_parts < target:
+            return df.repartition(target)
+        return df
+    max_split = int(
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+    if plan_size_bytes(df) < target * max_split:
+        return df.repartition(target)
+    return df
+
+
 class aqe_off_for_small_input:
     """Context manager: the SMALL-INPUT execution profile — disable
     adaptive query execution and narrow the shuffle width while a
@@ -176,7 +302,7 @@ class aqe_off_for_small_input:
     minutes; on a kB-MB input each stage's work is microseconds while its
     scheduling + replanning latency is ~100 ms — the composed corpus race
     measured ~115 stage jobs ≈ 15 s of pure wave latency at 5 k docs
-    (r7 profiling).  Below `threshold_bytes` (Catalyst's own analyzed
+    (r7 profiling).  Below INPUT_BYTES (1 GiB of Catalyst's own analyzed
     estimate of the input) the static plan is strictly better; at or
     above it this is a no-op and AQE keeps its coalesce/skew wins.  On a
     real cluster reading real data the gate never fires.
@@ -215,6 +341,7 @@ class aqe_off_for_small_input:
     _KEY = "spark.sql.adaptive.enabled"
     _SHUF = "spark.sql.shuffle.partitions"
     NARROW_SHUFFLE = 8
+    INPUT_BYTES = 1 << 30
     _lock = threading.Lock()
     _depth = 0
     # (owning SparkSession, saved priors): restore targets the session the
@@ -223,8 +350,7 @@ class aqe_off_for_small_input:
     # priors onto session B (ADVICE r8)
     _outermost: tuple | None = None
 
-    def __init__(self, df, threshold_bytes: int = 1 << 30,
-                 fires: bool | None = None) -> None:
+    def __init__(self, df, fires: bool | None = None) -> None:
         """`fires` overrides the plan-size gate with a caller-measured
         decision: iterative operators (connected components, Bellman-Ford)
         work on join-DERIVED inputs whose analyzed estimate is
@@ -233,7 +359,7 @@ class aqe_off_for_small_input:
         instead gate on the COUNTED size of the materialized frame the
         loop iterates over."""
         self._spark = df.sparkSession
-        self._fires = (plan_size_bytes(df) < threshold_bytes
+        self._fires = (plan_size_bytes(df) < self.INPUT_BYTES
                        if fires is None else bool(fires))
         self._entered = False
 

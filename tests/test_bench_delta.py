@@ -129,3 +129,26 @@ def test_bench_delta_selection_is_shared_with_the_function(monkeypatch,
     got = bench._newest_prior_bench(str(tmp_path))
     assert got is not None and got[0] == 7
     assert got[1].endswith("BENCH_r7.json")
+
+
+def test_bench_delta_across_core_counts_is_not_comparable(capsys, monkeypatch,
+                                                          tmp_path):
+    """A prior taken on a different core count is not a baseline: the
+    line must say "not comparable (32 vs 4 cores)" and give no
+    within-noise / exceeds-spread verdict.  The same prior on the same
+    core count is still adjudicated."""
+    import json
+
+    prior = {"cpus": 32, "parsed": {"value": 8.77, "secondary_value": 12.2}}
+    (tmp_path / "BENCH_r14.json").write_text(json.dumps(prior))
+    monkeypatch.setattr(bench.os.path, "dirname", lambda _p: str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "15")
+    bench._report_delta_vs_prior({"value": 15.44}, {"q1": 0.1},
+                                 {"value": 22.95}, cpus=4)
+    err = capsys.readouterr().err
+    assert "# delta vs BENCH_r14:" in err
+    assert "not comparable (32 vs 4 cores)" in err
+    assert "within-noise" not in err and "exceeds-spread" not in err
+    bench._report_delta_vs_prior({"value": 15.44}, {"q1": 0.1}, None, cpus=32)
+    err = capsys.readouterr().err
+    assert "exceeds-spread" in err and "not comparable" not in err

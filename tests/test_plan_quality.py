@@ -14,6 +14,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from tegallega_spark.queries import SPARK_QUERIES
 from tests.conftest import SF_SMOKE
 
@@ -349,8 +351,8 @@ def test_aqe_gate_fires_small_restores_and_ignores_large(spark):
             assert spark.conf.get(key) == "false"
         assert spark.conf.get(key) == "true"
 
-        # threshold below the estimate -> gate must not fire
-        with aqe_off_for_small_input(small, threshold_bytes=1):
+        # a caller-measured "large" decision -> gate must not fire
+        with aqe_off_for_small_input(small, fires=False):
             assert spark.conf.get(key) == "true"
 
         # restore must happen even when the body raises
@@ -397,7 +399,7 @@ def test_aqe_gate_interleaved_instances_restore_outermost_prior(spark):
         assert spark.conf.get(key) == "true"
 
         # a non-firing instance interleaved with a firing one is inert
-        c = aqe_off_for_small_input(small, threshold_bytes=1)  # won't fire
+        c = aqe_off_for_small_input(small, fires=False)
         d = aqe_off_for_small_input(small)
         c.__enter__()
         d.__enter__()
@@ -444,7 +446,7 @@ def test_parallelize_for_udf_scan_vs_shuffle_rooted_plans(spark):
     the repartition (UDF then runs as wide as the join's shuffle, however
     narrow that is).  Shuffle-rooted plans must instead compare
     spark.sql.shuffle.partitions against cluster parallelism."""
-    from tegallega_spark.operators.dedup import parallelize_for_udf
+    from tegallega_spark.session import parallelize_for_udf
 
     target = spark.sparkContext.defaultParallelism
 
@@ -482,7 +484,7 @@ def test_parallelize_for_udf_ignores_shuffle_words_in_literals(spark):
     widening repartition, running the UDF 1-2-way)."""
     import pyspark.sql.functions as F
 
-    from tegallega_spark.operators.dedup import (
+    from tegallega_spark.session import (
         _has_shuffle_origin_node,
         parallelize_for_udf,
     )
@@ -509,7 +511,7 @@ def test_shuffle_origin_covers_distinct_and_apply_in_pandas(spark):
     parallelize_for_udf doesn't stack a redundant exchange on top."""
     import pandas as pd
 
-    from tegallega_spark.operators.dedup import _has_shuffle_origin_node
+    from tegallega_spark.session import _has_shuffle_origin_node
 
     spark.range(10).toDF("n").createOrReplaceTempView("t_adv_distinct")
     sql_distinct = spark.sql("SELECT DISTINCT n FROM t_adv_distinct")
@@ -524,6 +526,105 @@ def test_shuffle_origin_covers_distinct_and_apply_in_pandas(spark):
         .applyInPandas(lambda pdf: pdf, "n long")
     )
     assert _has_shuffle_origin_node(applied._jdf.queryExecution().analyzed())
+
+
+def test_small_scan_input_scan_shuffle_and_size(spark):
+    """session.small_scan_input is the one small-input shape policy:
+    scan-rooted AND under SMALL_INPUT_BYTES.  A tiny scan answers True;
+    the same rows behind a repartition are shuffle-origin (False); a
+    scan-rooted frame estimated over 32 MiB is too big (False)."""
+    from tegallega_spark.session import (
+        SMALL_INPUT_BYTES,
+        load_table,
+        plan_size_bytes,
+        small_scan_input,
+    )
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    assert small_scan_input(docs)
+    assert small_scan_input(spark.range(100))
+    assert not small_scan_input(docs.repartition(4))
+    big = spark.range(10**8)
+    assert plan_size_bytes(big) >= SMALL_INPUT_BYTES
+    assert not small_scan_input(big)
+
+
+def _gate_site_inputs(spark):
+    import pyspark.sql.functions as F
+
+    text = ["the quick brown fox jumps over the lazy dog again and again",
+            "the quick brown fox jumps over the lazy dog again and again",
+            "an entirely different sentence about transit stops in bandung"]
+    docs = spark.createDataFrame(list(enumerate(text)), "doc_id long, text string")
+    vecs = spark.range(6).select(
+        F.col("id").alias("vec_id"),
+        F.array(*(F.sin(F.col("id") + i).cast("float") for i in range(4)))
+        .alias("embedding"),
+    )
+    return docs, vecs
+
+
+# (operator module, single-task implementation it dispatches to, call)
+_GATE_SITES = {
+    "ngram_lm": ("ngram_lm", None,
+                 lambda m, docs, vecs: m.train_bigram_lm(docs)),
+    "minhash_verified": ("dedup", "_single_task_minhash_verified",
+                         lambda m, docs, vecs: m.minhash_near_duplicates_verified(
+                             docs, "doc_id", "text")),
+    "shingle_jaccard": ("dedup", "_single_task_jaccard_pairs",
+                        lambda m, docs, vecs: m.exact_shingle_jaccard_pairs(docs)),
+    "duplicated_spans": ("textual", "_single_task_duplicated_spans",
+                         lambda m, docs, vecs: m.duplicated_spans(docs, k=3)),
+    "vector_broadcast": ("similarity", "_single_task_all_pairs",
+                         lambda m, docs, vecs: m.all_pairs_above(vecs, dim=4)),
+}
+
+
+@pytest.mark.parametrize("decision", [True, False])
+@pytest.mark.parametrize("site", sorted(_GATE_SITES))
+def test_auto_gated_sites_decide_through_small_scan_input(
+    spark, monkeypatch, site, decision
+):
+    """Every auto-gated operator reaches its shape decision by calling
+    session.small_scan_input once on its input, and follows the answer:
+    True dispatches to the single-task (or broadcast) implementation,
+    False builds the distributed plan.  No site keeps an inline copy of
+    the size/shuffle check."""
+    import importlib
+
+    from pyspark.sql import DataFrame
+
+    from tegallega_spark.session import release_intermediates
+
+    mod_name, single_fn, call = _GATE_SITES[site]
+    mod = importlib.import_module(f"tegallega_spark.operators.{mod_name}")
+    docs, vecs = _gate_site_inputs(spark)
+    seen = []
+
+    def gate(df):
+        seen.append(df)
+        return decision
+
+    monkeypatch.setattr(mod, "small_scan_input", gate)
+    sentinel = object()
+    if single_fn is not None:
+        def single(*a, **k):
+            assert decision, "single-task shape taken against the gate"
+            return sentinel
+
+        monkeypatch.setattr(mod, single_fn, single)
+
+    out = call(mod, docs, vecs)
+    assert seen == [vecs if site == "vector_broadcast" else docs]
+    if single_fn is None:  # the LM records its decision on the model
+        assert out.small_gate is decision
+        for frame in (out.token_arrays, out.vocab, out.doc_bigrams, out.bigrams):
+            frame.unpersist()
+    elif decision:
+        assert out is sentinel
+    else:
+        assert isinstance(out, DataFrame)
+        release_intermediates(out)
 
 
 def test_prefork_runs_once_per_session(spark):

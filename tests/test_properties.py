@@ -7,7 +7,7 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from tegallega_spark.functions.timecodec import (
     gtfs_time_to_seconds,
@@ -323,10 +323,22 @@ def test_y4m_c444_roundtrip_property(n_frames, h2, w2, fps, gray, seed):
     fps=st.integers(min_value=1, max_value=60),
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
+# a 2x2 frame whose mean luma error is 6.2: one pixel's own Y plus the
+# block's averaged chroma lands far outside the RGB gamut
+@example(n_frames=1, h2=1, w2=1, fps=1, seed=1681)
 def test_y4m_c420_roundtrip_property(n_frames, h2, w2, fps, seed):
-    """C420 2×2-averages chroma: frame count / dims / fps exact, and the
-    BT.601-weighted luma tracks the original closely even on worst-case
-    random chroma."""
+    """C420 2×2-averages chroma: frame count / dims / fps exact, the
+    chroma planes are the 2×2 block means, and luma is lost ONLY where
+    the decoded RGB leaves the gamut and is clipped.
+
+    The BT.601 chroma axes carry no luma, so the unclipped decode u of a
+    pixel has exactly the luma its Y sample encodes, whatever chroma the
+    block average gave it.  Per pixel the luma error is therefore at most
+    the clipping loss |L(clip(u)) - L(u)| plus the Y rounding
+    (0.5 · 255/219) and the output rounding (0.5).  The clipping loss is
+    a property of 4:2:0 itself (a saturated neighbour's chroma on a dark
+    pixel), not a codec defect, and on random frames it can dominate a
+    2×2 frame's mean — so the bound is per pixel, not a fixed mean."""
     import numpy as np
 
     from tegallega_spark.operators import multimodal as MM
@@ -335,15 +347,29 @@ def test_y4m_c420_roundtrip_property(n_frames, h2, w2, fps, seed):
     h, w = 2 * h2, 2 * w2
     frames = [rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
               for _ in range(n_frames)]
-    back, got_fps = MM.decode_y4m(MM.encode_y4m(frames, fps=fps,
-                                                colorspace="C420"))
+    payload = MM.encode_y4m(frames, fps=fps, colorspace="C420")
+    back, got_fps = MM.decode_y4m(payload)
     assert got_fps == fps and len(back) == n_frames
+    yw = np.array([0.299, 0.587, 0.114])
+    csz = (h // 2) * (w // 2)
+    off = payload.index(b"\n") + 1
     for orig, dec in zip(frames, back):
         assert dec.shape == (h, w, 3)
-        yw = np.array([0.299, 0.587, 0.114])
-        yo = orig.astype(float) @ yw
-        yd = dec.astype(float) @ yw
-        assert np.abs(yo - yd).mean() < 4
+        assert payload[off: off + 6] == b"FRAME\n"
+        y = np.frombuffer(payload, np.uint8, h * w, off + 6).astype(float)
+        c = np.frombuffer(payload, np.uint8, 2 * csz, off + 6 + h * w)
+        off += 6 + h * w + 2 * csz
+        c = np.moveaxis(c.reshape(2, h // 2, w // 2).astype(float), 0, -1)
+        # chroma planes: 2×2 means of the per-pixel chroma (two roundings)
+        full = orig.astype(float) @ MM._Y4M_FWD[1:].T + 128.0
+        assert np.abs(c - full.reshape(h // 2, 2, w // 2, 2, 2)
+                      .mean(axis=(1, 3))).max() <= 1.0
+        ycc = np.dstack([y.reshape(h, w) - 16.0,
+                         c.repeat(2, 0).repeat(2, 1) - 128.0])
+        u = ycc @ MM._Y4M_INV.T
+        clip_loss = np.abs(np.clip(u, 0, 255) @ yw - u @ yw)
+        err = np.abs(orig.astype(float) @ yw - dec.astype(float) @ yw)
+        assert (err <= clip_loss + 0.5 * 255 / 219 + 0.5 + 0.01).all()
 
 
 @settings(max_examples=40, deadline=None)
