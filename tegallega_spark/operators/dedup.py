@@ -2,18 +2,22 @@
 
 Reference patterns: first-wins dedup by stop_id (generate_gtfs.py:115-123),
 last-wins dedup by relationId (update-routes.js:37).  Extended with the
-large-scale near-dup family (MinHash-LSH, SimHash, n-gram Jaccard) a
-training-data pipeline needs.
+large-scale near-dup family (MinHash-LSH, SimHash, exact shingle Jaccard)
+a training-data pipeline needs — one implementation per semantic, each
+exact-verified.
 
 Scale notes (100 TB):
 - keep-first/last are a single shuffle on the dedup key (window + filter);
   AQE handles skewed keys.
-- MinHash-LSH: signature computation is embarrassingly parallel (per-row
-  column math over exploded shingles); candidate generation joins on
-  (band_id, band_hash) buckets so the shuffle volume is #bands × #docs tiny
-  rows, never the quadratic pair space.
-- SimHash: 64-bit fingerprint per doc via bit-bucketed hash sums; near-dup
-  candidates join on band substrings of the fingerprint.
+- MinHash-LSH: one embarrassingly parallel Arrow UDF pass per doc emits
+  its LSH band hashes and its distinct shingle-hash set (the 32-long
+  signature never leaves a numpy batch); candidate generation joins on
+  (band_idx, band_hash) buckets so the shuffle volume is #bands × #docs
+  tiny rows, never the quadratic pair space, and each candidate's exact
+  Jaccard is recomputed from the persisted shingle-hash sets.
+- SimHash: 60-bit md5-family fingerprint per doc via bit-bucketed hash
+  sums; near-dup candidates join on band substrings of the fingerprint,
+  then exact Jaccard verifies them.
 """
 
 from __future__ import annotations
@@ -97,41 +101,11 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 MINHASH_PRIME = 4294967311  # prime > 2^32
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """One xxhash64 per shingle, reduced into [0, MINHASH_PRIME)."""
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME)))
-
-
-def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature from pre-hashed shingles (array<bigint> in [0,P)).
-
-    The k permutations are universal hashes h_i(x) = (a_i*x + b_i) mod P —
-    k multiply-adds per shingle instead of k string hashes (~k× cheaper on
-    the hot path; standard practice, see MMDS ch.3).  Deterministic
-    constants derive from splitmix64 of the permutation index.
-    """
-    # a < 2^29 and x < P ≈ 2^32 keep the product under 2^62 —
-    # no 64-bit overflow, safe under ANSI mode.
-    P = MINHASH_PRIME
-
-    def _ab(i: int) -> tuple[int, int]:
-        # splitmix64-derived deterministic constants per permutation
-        x = (i * 0x9E3779B97F4A7C15 + 0xBF58476D1CE4E5B9) % (1 << 64)
-        x ^= x >> 30
-        x = (x * 0xD6E8FEB86659FD93) % (1 << 64)
-        return (x % ((1 << 29) - 1)) + 1, x % P
-
-    def _perm(a: int, b: int):
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(P))
-
-    sig_cols = []
-    for i in range(num_hashes):
-        a, b = _ab(i)
-        sig_cols.append(F.array_min(F.transform(hashes, _perm(a, b))))
-    return F.array(*sig_cols)
-
-
 def _perm_constants(num_hashes: int) -> tuple[list[int], list[int]]:
+    """(a_i, b_i) of the k MinHash permutations h_i(x) = (a_i*x + b_i) mod P
+    — k multiply-adds per shingle instead of k string hashes (MMDS ch.3),
+    splitmix64-derived from the permutation index.  a < 2^29 and x < P ≈
+    2^32 keep the product under 2^62, so int64 math never overflows."""
     a_s, b_s = [], []
     for i in range(num_hashes):
         x = (i * 0x9E3779B97F4A7C15 + 0xBF58476D1CE4E5B9) % (1 << 64)
@@ -215,128 +189,6 @@ def _make_shingle_kernel(shingle_n: int):
     return kernel
 
 
-def make_signature_udf(shingle_n: int = 3, num_hashes: int = 32):
-    """Arrow-vectorized text→signature pandas_udf.
-
-    The pure-column path (word_shingles → shingle_hashes → permutations)
-    runs as interpreted higher-order functions — correct but ~3× slower on
-    long documents because HOFs don't enter whole-stage codegen.  This UDF
-    runs the shared shingle kernel (memoized word hashes + one numpy
-    polynomial pass, see _make_shingle_kernel) then all permutations as one
-    numpy matrix op.  Hash values differ from the column path but MinHash
-    only ever compares signatures to each other, so the estimator is
-    unaffected.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    a_s, b_s = _perm_constants(num_hashes)
-    A = np.array(a_s, dtype=np.int64)[:, None]
-    B = np.array(b_s, dtype=np.int64)[:, None]
-    P = MINHASH_PRIME
-    kernel = _make_shingle_kernel(shingle_n)
-
-    @pandas_udf("array<long>")
-    def signature(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            hv = (kernel(text) % np.uint64(P)).astype(np.int64)
-            out.append(((A * hv + B) % P).min(axis=1).tolist())
-        return pd.Series(out)
-
-    return signature
-
-
-def minhash_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """MinHash + LSH near-duplicate pairs.
-
-    Pipeline: shingle → signature → split signature into `bands` bands →
-    hash each band → self-join on (band_idx, band_hash) → estimate Jaccard
-    as fraction of matching signature positions → filter ≥ threshold.
-
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b.
-
-    At scale the only shuffle is the band-bucket join; the quadratic
-    candidate space is never materialized because only bucket-colliding
-    pairs meet.  use_arrow=True computes signatures in a vectorized
-    pandas_udf (~3× faster — HOFs don't codegen); False keeps the pure
-    column-expression path.  Signatures persist because the LSH self-join
-    reads them from both sides.
-    """
-    rows_per_band = num_hashes // bands
-    if use_arrow:
-        sig_udf = make_signature_udf(shingle_n, num_hashes)
-        sig = df.select(
-            F.col(id_col).alias("__id"), sig_udf(F.col(text_col)).alias("__sig")
-        ).persist()
-    else:
-        hashed = df.select(
-            F.col(id_col).alias("__id"),
-            shingle_hashes(word_shingles(F.col(text_col), shingle_n)).alias("__h"),
-        )
-        sig = hashed.select(
-            "__id",
-            minhash_signature_from_hashes(F.col("__h"), num_hashes).alias("__sig"),
-        ).persist()
-    pairs = _lsh_candidate_pairs(sig, bands, rows_per_band)
-    # join signatures back once per surviving pair — the band join itself
-    # only ever shuffles (id, band) rows, never the 32-long signatures
-    sa = sig.select(F.col("__id").alias("id_a"), F.col("__sig").alias("sig_a"))
-    sb = sig.select(F.col("__id").alias("id_b"), F.col("__sig").alias("sig_b"))
-    with_sigs = pairs.join(sa, "id_a").join(sb, "id_b")
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda a, b: a == b),
-            lambda m: m,
-        )
-    ) / F.lit(float(num_hashes))
-    return attach_intermediates(
-        with_sigs.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard"),
-        sig,
-    )
-
-
-def _lsh_candidate_pairs(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """Banded LSH self-join on (__id, __sig) → distinct BARE id pairs.
-
-    Only (id, band_idx, band_hash) rows enter the join and only (id_a, id_b)
-    pairs leave it — signatures never ride through the candidate shuffle
-    (they were 2×32 longs per pair; at q40's corpus that shuffle was 25% of
-    the whole headline bench)."""
-    banded = sig.select(
-        "__id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.concat_ws(",", F.transform(
-                        F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ))
-                ),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
-    left = banded.select(F.col("__id").alias("id_a"), "band_idx", "band_hash")
-    right = banded.select(F.col("__id").alias("id_b"), "band_idx", "band_hash")
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
 
 def _make_band_kernel(num_hashes: int, bands: int):
     """Shared numpy step: distinct shingle hashes (uint64) → band hashes.
@@ -398,12 +250,11 @@ def make_band_shingle_udf(shingle_n: int = 3, num_hashes: int = 32, bands: int =
     One pass emits BOTH the LSH band hashes and the distinct shingle-hash
     set.  The band kernel already derives the signature from the shingle
     hashes, so computing them separately (band UDF over the corpus, then a
-    second text scan + shingle UDF over the verify candidates, as the
-    unfused path does) does the tokenize+hash work twice; fusing halves the
-    Python CPU and removes a whole UDF stage.  The trade is storage: the
-    persisted frame carries the shingle arrays (≈ tokenized corpus size)
-    instead of just `bands` longs/doc — see minhash_near_duplicates_verified
-    for when each wins.
+    second text scan + shingle UDF over the verify candidates) would do the
+    tokenize+hash work twice; fusing halves the Python CPU and removes a
+    whole UDF stage.  The trade is storage: the persisted frame carries the
+    shingle arrays (≈ tokenized corpus size) instead of just `bands`
+    longs/doc.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -494,7 +345,7 @@ def _pairs_from_band_hashes(
 def make_shingle_hash_udf(shingle_n: int):
     """Arrow-vectorized text→sorted distinct shingle-hash array (array<long>).
 
-    Same tokenization as make_signature_udf; each distinct shingle becomes
+    Same tokenization as word_shingles; each distinct shingle becomes
     an 8-byte hash (shared kernel: memoized blake2b word hashes + positional
     polynomial), so exact set intersection/union runs over compact long
     arrays instead of wide string arrays (≈3× smaller shuffle, and the set
@@ -561,7 +412,7 @@ def _single_task_minhash_verified(
     bands: int,
     threshold: float,
 ) -> DataFrame:
-    """Small-corpus HYBRID profile for the FUSED verified-MinHash path:
+    """Small-corpus HYBRID profile for the verified-MinHash path:
     the encode (tokenize → shingle hash → band hash, the CPU-heavy part)
     stays the SAME parallel Arrow UDF the distributed shape uses, and
     only the latency-bound tail — bucket grouping, candidate generation,
@@ -697,13 +548,28 @@ def minhash_near_duplicates_verified(
     num_hashes: int = 32,
     bands: int = 16,
     jaccard_threshold: float = 0.7,
-    use_arrow: bool = True,
     max_bucket: int | None = None,
-    fused: bool = True,
     remediate_dropped: bool = False,
     single_task: bool | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with EXACT Jaccard verification.
+
+    Banded LSH generates candidates (documents sharing >= 1 band bucket),
+    then each candidate pair's exact shingle-set Jaccard is recomputed and
+    filtered — the output (id_a, id_b, jaccard) is deterministic and equals
+    the exact all-pairs result whenever the LSH recall is 1 at the
+    threshold, which makes it oracle-checkable (falsifiable) instead of
+    rows-only.  16 bands × 2 rows: a pair at jaccard j collides w.p.
+    1-(1-j²)¹⁶ — ≥0.99998 for j ≥ 0.7.  Skew note (100 TB): a shingle
+    shared by k docs puts k rows in one band bucket; cap bucket size or
+    salt hot buckets before the self-join if the corpus is template-heavy.
+
+    ONE Arrow UDF pass (make_band_shingle_udf) emits band hashes AND the
+    shingle-hash set per doc; the band self-join shuffles only
+    (id, band, hash) rows, and the verify join reads shingle arrays from
+    the persisted encoded frame — no second text scan, no candidate
+    semi-join.  The persisted frame stores the shingle arrays (≈ tokenized
+    corpus size, MEMORY_AND_DISK).
 
     remediate_dropped (needs max_bucket): buckets the guard drops are
     resolved by a bounded star pass (see _pairs_from_band_hashes) whose
@@ -712,27 +578,7 @@ def minhash_near_duplicates_verified(
     every other pair, and a template mega-cluster collapses onto its
     representative instead of silently surviving dedup.
 
-    Same LSH candidate generation as minhash_near_duplicates, but each
-    candidate pair's exact shingle-set Jaccard is recomputed and filtered —
-    the output (id_a, id_b, jaccard) is deterministic and equals the exact
-    all-pairs result whenever the LSH recall is 1 at the threshold, which
-    makes it oracle-checkable (falsifiable) instead of rows-only.  16 bands
-    × 2 rows: a pair at jaccard j collides w.p. 1-(1-j²)¹⁶ — ≥0.99998 for
-    j ≥ 0.7.  Skew note (100 TB): a shingle shared by k docs puts k rows in
-    one band bucket; cap bucket size or salt hot buckets before the
-    self-join if the corpus is template-heavy.
-
-    fused=True (default, Arrow path): ONE UDF pass emits band hashes AND the
-    shingle-hash set per doc; the band self-join still shuffles only
-    (id, band, hash) rows, and the verify join reads shingle arrays from the
-    persisted encoded frame — no second text scan, no candidate semi-join,
-    half the Python CPU.  The trade is that the persisted frame stores the
-    shingle arrays (≈ tokenized corpus size, MEMORY_AND_DISK) instead of
-    just `bands` longs/doc.  fused=False keeps the two-scan shape for
-    storage-constrained clusters: bands-only persist, then shingle hashes
-    recomputed for the (typically tiny) candidate subset only.
-
-    single_task: None (default) auto-gates the fused EXACT-semantics shape
+    single_task: None (default) auto-gates the EXACT-semantics shape
     (max_bucket=None, no remediation) — when session.small_scan_input(df)
     holds, the whole LSH+verify runs in one executor task
     (_single_task_minhash_verified, one job); shuffle-origin or large
@@ -743,185 +589,37 @@ def minhash_near_duplicates_verified(
             "single_task implements the exact banded semantics only; "
             "max_bucket guarding requires the distributed shape"
         )
-    if single_task and not (use_arrow and fused):
-        # ADVICE r13: a forced True used to fall through to the
-        # distributed two-scan shapes silently — inconsistent with the
-        # max_bucket case above, which raises
-        raise ValueError(
-            "single_task is implemented for the fused Arrow path only "
-            "(use_arrow=True, fused=True)"
+    if single_task is None and max_bucket is None and not remediate_dropped:
+        single_task = small_scan_input(df)
+    if single_task:
+        return _single_task_minhash_verified(
+            df, id_col, text_col, shingle_n, num_hashes, bands,
+            jaccard_threshold,
         )
-    if use_arrow and fused:
-        if (
-            single_task is None
-            and max_bucket is None
-            and not remediate_dropped
-        ):
-            single_task = small_scan_input(df)
-        if single_task:
-            return _single_task_minhash_verified(
-                df, id_col, text_col, shingle_n, num_hashes, bands,
-                jaccard_threshold,
-            )
-        enc_udf = make_band_shingle_udf(shingle_n, num_hashes, bands)
-        enc = parallelize_for_udf(df).select(
-            F.col(id_col).alias("__id"), enc_udf(F.col(text_col)).alias("__e")
-        ).persist()  # band self-join reads it twice, verify join twice more
-        pairs = _pairs_from_band_hashes(
-            enc.select("__id", F.col("__e.bh").alias("__bh")),
-            max_bucket=max_bucket, remediate_dropped=remediate_dropped,
-        )
-        a = enc.select(F.col("__id").alias("id_a"), F.col("__e.sh").alias("sh_a"))
-        b = enc.select(F.col("__id").alias("id_b"), F.col("__e.sh").alias("sh_b"))
-        joined = pairs.join(a, "id_a").join(b, "id_b")
-        common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - common
-        exact = joined.select(
-            "id_a", "id_b", (common.cast("double") / union).alias("jaccard")
-        )
-        return attach_intermediates(
-            exact.filter(F.col("jaccard") >= jaccard_threshold), enc
-        )
-    if use_arrow:
-        # signatures are only consumed through their band hashes here, so the
-        # fused UDF emits `bands` longs per doc and the 32-long signature
-        # array never exists outside a numpy batch
-        bh_udf = make_band_hash_udf(shingle_n, num_hashes, bands)
-        bh = parallelize_for_udf(df).select(
-            F.col(id_col).alias("__id"), bh_udf(F.col(text_col)).alias("__bh")
-        ).persist()  # both sides of the band self-join read it
-        pairs = _pairs_from_band_hashes(
-            bh, max_bucket=max_bucket, remediate_dropped=remediate_dropped
-        )
-    else:
-        sig = df.select(
-            F.col(id_col).alias("__id"),
-            minhash_signature_from_hashes(
-                shingle_hashes(word_shingles(F.col(text_col), shingle_n)), num_hashes
-            ).alias("__sig"),
-        ).persist()
-        pairs = _lsh_candidate_pairs(sig, bands, num_hashes // bands)
-    exact = exact_jaccard_for_pairs(pairs, df, id_col, text_col, shingle_n)
+    enc_udf = make_band_shingle_udf(shingle_n, num_hashes, bands)
+    enc = parallelize_for_udf(df).select(
+        F.col(id_col).alias("__id"), enc_udf(F.col(text_col)).alias("__e")
+    ).persist()  # band self-join reads it twice, verify join twice more
+    pairs = _pairs_from_band_hashes(
+        enc.select("__id", F.col("__e.bh").alias("__bh")),
+        max_bucket=max_bucket, remediate_dropped=remediate_dropped,
+    )
+    a = enc.select(F.col("__id").alias("id_a"), F.col("__e.sh").alias("sh_a"))
+    b = enc.select(F.col("__id").alias("id_b"), F.col("__e.sh").alias("sh_b"))
+    joined = pairs.join(a, "id_a").join(b, "id_b")
+    common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - common
+    exact = joined.select(
+        "id_a", "id_b", (common.cast("double") / union).alias("jaccard")
+    )
     return attach_intermediates(
-        exact.filter(F.col("jaccard") >= jaccard_threshold),
-        exact,
-        bh if use_arrow else sig,
-    )
-
-
-# ---------------------------------------------------------------------------
-# n-gram Jaccard (exact similarity on shingle sets)
-# ---------------------------------------------------------------------------
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard over word n-gram sets via an inverted-index join.
-
-    explode shingles → join on shingle → count common per pair →
-    |A∩B| / (|A|+|B|-|A∩B|).  The join on shingle is the inverted index:
-    pair candidates only materialize when they share ≥1 shingle.
-
-    r6: shingles come from the Arrow hash kernel (make_shingle_hash_udf)
-    instead of the word_shingles column HOF — the interpreted transform
-    re-evaluates the tokenize subtree per shingle (O(tokens²) regex per
-    doc, the same pathology fixed in repetition_stats/contamination this
-    round), and both the index join and the set cardinalities only need
-    shingle IDENTITY, which the kernel's 8-byte hashes carry exactly up
-    to 2⁻⁶⁴ collisions (the q34 oracle recomputes every Jaccard from
-    string sets and would hash-mismatch on any corpus-visible one).
-    """
-    sh_udf = make_shingle_hash_udf(shingle_n)
-    sh = parallelize_for_udf(df).select(
-        F.col(id_col).alias("__id"),
-        sh_udf(F.col(text_col)).alias("__sh"),
-    ).withColumn("__card", F.size("__sh"))
-    exploded = sh.select("__id", "__card", F.explode("__sh").alias("shingle"))
-    a = exploded.select(
-        F.col("__id").alias("id_a"), F.col("__card").alias("card_a"), "shingle"
-    )
-    b = exploded.select(
-        F.col("__id").alias("id_b"), F.col("__card").alias("card_b"), "shingle"
-    )
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "card_a", "card_b")
-        .agg(F.count("*").alias("common"))
-    )
-    jac = F.col("common") / (F.col("card_a") + F.col("card_b") - F.col("common"))
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        exact.filter(F.col("jaccard") >= jaccard_threshold), enc
     )
 
 
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-def simhash64(text: Column, shingle_n: int = 2) -> Column:
-    """64-bit SimHash fingerprint as bigint, pure column math.
-
-    For each of 64 bit positions, sum +1/-1 over shingles according to that
-    bit of xxhash64(shingle); bit set iff the sum is positive.
-    """
-    shingles = word_shingles(text, shingle_n)
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    def bit_of(i):
-        # shiftright on bigint keeps sign for bit 63; mask with 1 fixes it
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-    bits = [
-        F.when(bit_of(i) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        * F.lit(1 << i).cast("long")
-        for i in range(63)  # skip the sign bit to stay positive
-    ]
-    total = bits[0]
-    for b in bits[1:]:
-        total = total + b
-    return total
-
-
-def make_simhash_udf(shingle_n: int = 2):
-    """Arrow-vectorized text→SimHash-fingerprint pandas_udf.
-
-    The column-expression path (simhash64) re-traverses the shingle-hash
-    array once per bit — 63 interpreted F.aggregate passes per document.
-    This UDF computes all 64 bit-sums in ONE numpy pass per Arrow batch:
-    distinct shingle hashes from the shared kernel (memoized word hashes +
-    positional polynomial), expand to a (shingles × 64) ±1 matrix,
-    column-sum, threshold.  Hash values differ from the column path but
-    fingerprints are only ever compared to each other, so the near-dup
-    semantics are unchanged."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    kernel = _make_shingle_kernel(shingle_n)
-    shifts = np.arange(64, dtype=np.uint64)
-
-    @pandas_udf("long")
-    def fingerprint(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            hv = kernel(text)
-            bits = ((hv[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
-            sums = (2 * bits - 1).sum(axis=0)
-            fp = int(((sums[:63] > 0).astype(np.uint64) << shifts[:63]).sum())
-            out.append(fp)
-        return pd.Series(out, dtype="int64")
-
-    return fingerprint
-
 
 def md5_shingle_hashes(text: Column, shingle_n: int = 2) -> Column:
     """60-bit integers from the first 15 md5 hex chars of each distinct
@@ -957,64 +655,15 @@ def make_simhash_bitsum_udf():
     return fingerprint
 
 
-def md5_simhash_column(hashes: Column) -> Column:
-    """Pure-column 60-bit SimHash over an array of md5 shingle hashes —
-    the no-Arrow fallback for make_simhash_bitsum_udf (ADVICE r9: callers
-    with use_arrow=False used to get an Arrow UDF anyway).  One
-    F.aggregate fold per bit (60 interpreted folds per row): correct
-    everywhere, ~an order slower than the Arrow pass — parity is pinned
-    bit-identical in tests.  Bit b is set iff strictly more than half the
-    shingle hashes carry it (sum of ±1 > 0 ⇔ 2·ones > n; the tie rounds
-    to 0, matching the numpy kernel's `sums > 0`)."""
-    n = F.size(hashes)
-
-    def _bit_counter(b: int):
-        # NOTE: a `b=b` default param would make pyspark's lambda-arity
-        # inspection see a 3-ary merge function and bind a lambda var to b
-        return lambda acc, h: acc + F.shiftrightunsigned(h, b).bitwiseAND(
-            F.lit(1)
-        )
-
-    terms = []
-    for b in range(60):
-        ones = F.aggregate(hashes, F.lit(0).cast("long"), _bit_counter(b))
-        terms.append(
-            F.when(ones * 2 > n, F.lit(1 << b).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int, use_arrow: bool,
-    hash_fn: str = "xxhash",
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> DataFrame:
-    if hash_fn == "md5":
-        # oracle-replayable: md5 hashes via columns, bit sums via Arrow
-        # (or, with use_arrow=False, via the pure-column fold — ADVICE r9)
-        if not use_arrow:
-            return df.select(
-                F.col(id_col).alias("__id"),
-                md5_simhash_column(
-                    md5_shingle_hashes(F.col(text_col), shingle_n)
-                ).alias("__fp"),
-            )
-        fp_udf = make_simhash_bitsum_udf()
-        return parallelize_for_udf(df).select(
-            F.col(id_col).alias("__id"),
-            fp_udf(md5_shingle_hashes(F.col(text_col), shingle_n)).alias("__fp"),
-        )
-    if use_arrow:
-        fp_udf = make_simhash_udf(shingle_n)
-        return parallelize_for_udf(df).select(
-            F.col(id_col).alias("__id"), fp_udf(F.col(text_col)).alias("__fp")
-        )
-    return df.select(
-        F.col(id_col).alias("__id"), simhash64(F.col(text_col), shingle_n).alias("__fp")
+    """(__id, __fp): the 60-bit md5-family SimHash per document —
+    oracle-replayable md5 shingle hashes via columns, bit sums via Arrow."""
+    fp_udf = make_simhash_bitsum_udf()
+    return parallelize_for_udf(df).select(
+        F.col(id_col).alias("__id"),
+        fp_udf(md5_shingle_hashes(F.col(text_col), shingle_n)).alias("__fp"),
     )
 
 
@@ -1025,24 +674,19 @@ def simhash_near_duplicates(
     shingle_n: int = 2,
     max_hamming: int = 3,
     bands: int = 4,
-    use_arrow: bool = True,
     max_bucket: int | None = None,
-    hash_fn: str = "xxhash",
 ) -> DataFrame:
-    """SimHash near-dup pairs: band the fingerprint (63-bit xxhash family,
-    60-bit md5 family — `hash_fn`) into `bands` chunks; by pigeonhole, any
-    pair within max_hamming (< bands) shares at least one identical chunk
-    → equi-join per chunk, then exact Hamming filter via bit_count(xor).
-    The pigeonhole argument needs only bands > max_hamming — chunks not
-    covering all bits still guarantee recall (uncovered-bit diffs only
-    reduce covered-bit diffs).  hash_fn="md5" keeps the whole family
-    DuckDB-replayable (see md5_shingle_hashes)."""
+    """SimHash near-dup pairs: band the 60-bit fingerprint into `bands`
+    chunks; by pigeonhole, any pair within max_hamming (< bands) shares at
+    least one identical chunk → equi-join per chunk, then exact Hamming
+    filter via bit_count(xor).  The pigeonhole argument needs only
+    bands > max_hamming — chunks not covering all bits still guarantee
+    recall (uncovered-bit diffs only reduce covered-bit diffs).  The md5
+    hash family keeps the whole contract DuckDB-replayable (see
+    md5_shingle_hashes)."""
     # persist: the banded self-join reads fingerprints from both sides
-    fp = simhash_fingerprints(
-        df, id_col, text_col, shingle_n, use_arrow, hash_fn=hash_fn
-    ).persist()
-    width = 60 if hash_fn == "md5" else 64
-    chunk_bits = width // bands
+    fp = simhash_fingerprints(df, id_col, text_col, shingle_n).persist()
+    chunk_bits = 60 // bands
     banded = fp.select(
         "__id",
         "__fp",
@@ -1073,7 +717,7 @@ def simhash_near_duplicates(
     # hamming filter BEFORE the pair dedup: fingerprints (8 bytes) ride the
     # band join anyway, so filtering each join row first means the dedup
     # shuffle only sees true near-candidates — with coarse chunks (small
-    # 64/bands) the unfiltered band join can emit millions of junk pairs
+    # 60/bands) the unfiltered band join can emit millions of junk pairs
     return attach_intermediates(
         a.join(b, ["band_idx", "band_val"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1093,9 +737,7 @@ def simhash_near_duplicates_verified(
     max_hamming: int = 12,
     bands: int = 13,
     jaccard_threshold: float = 0.7,
-    use_arrow: bool = True,
     max_bucket: int | None = None,
-    hash_fn: str = "xxhash",
 ) -> DataFrame:
     """SimHash near-dup pairs with EXACT Jaccard verification.
 
@@ -1104,7 +746,7 @@ def simhash_near_duplicates_verified(
     shingle-set Jaccard is then recomputed and filtered, so the output
     (id_a, id_b, jaccard) is deterministic: exactly the pairs with
     fingerprint hamming ≤ max_hamming AND exact Jaccard ≥ threshold.
-    With hash_fn="md5" that CONTRACT is itself oracle-checkable — DuckDB
+    With the md5 hash family that CONTRACT is itself oracle-checkable — DuckDB
     can recompute the md5-simhash fingerprints, the hamming distances,
     and the exact Jaccard, so the gate checks what the operator promises
     at every scale.  (A plain exact-Jaccard oracle is STRICTER than the
@@ -1112,70 +754,13 @@ def simhash_near_duplicates_verified(
     hamming 13 — simhash's documented ε materializing, not a banding
     recall bug; the md5 oracle form pins the horizon explicitly.)"""
     cand_full = simhash_near_duplicates(
-        df, id_col, text_col, shingle_n, max_hamming, bands, use_arrow,
-        max_bucket=max_bucket, hash_fn=hash_fn,
+        df, id_col, text_col, shingle_n, max_hamming, bands,
+        max_bucket=max_bucket,
     )
     cand = attach_intermediates(cand_full.select("id_a", "id_b"), cand_full)
     exact = exact_jaccard_for_pairs(cand, df, id_col, text_col, shingle_n)
     return attach_intermediates(
         exact.filter(F.col("jaccard") >= jaccard_threshold), exact
-    )
-
-
-# ---------------------------------------------------------------------------
-# MLlib MinHashLSH variant (SURVEY §7: pyspark.ml.feature.MinHashLSH)
-# ---------------------------------------------------------------------------
-
-def minhash_near_duplicates_mllib(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    jaccard_threshold: float = 0.5,
-    vocab_size: int = 1 << 18,
-) -> DataFrame:
-    """Same contract as minhash_near_duplicates, built on
-    pyspark.ml.feature.MinHashLSH: shingles → hashed sparse vectors →
-    approxSimilarityJoin on Jaccard distance.
-
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b.  Kept alongside the
-    hand-rolled implementation because the MLlib estimator manages its own
-    banding internally (no tunable bands) and requires a vector conversion
-    pass; the hand-rolled path is the default for that control.
-    """
-    from pyspark.ml.feature import MinHashLSH
-    from pyspark.ml.linalg import Vectors, VectorUDT
-
-    shingles = df.select(
-        F.col(id_col).alias("__id"),
-        word_shingles(F.col(text_col), shingle_n).alias("__sh"),
-    )
-
-    # VectorUDT is not Arrow-serializable (no pandas_udf) — a pickled UDF
-    # is the documented bridge into MLlib's LSH estimator
-    @F.udf(VectorUDT())
-    def to_sparse(arr):
-        import zlib
-
-        idxs = sorted({zlib.crc32(s.encode()) % vocab_size for s in arr})
-        return Vectors.sparse(vocab_size, idxs, [1.0] * len(idxs))
-
-    vecs = shingles.select("__id", to_sparse(F.col("__sh")).alias("features"))
-    model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hashes, seed=42
-    ).fit(vecs)
-    pairs = model.approxSimilarityJoin(
-        vecs, vecs, 1.0 - jaccard_threshold, distCol="jaccard_dist"
-    )
-    return (
-        pairs.select(
-            F.col("datasetA.__id").alias("id_a"),
-            F.col("datasetB.__id").alias("id_b"),
-            (1.0 - F.col("jaccard_dist")).alias("est_jaccard"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 

@@ -12,6 +12,8 @@ array_to_vector, seeded → deterministic).
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -183,6 +185,13 @@ def train_centroids_sampled(
                 f"sample_x has {len(sample_x)} rows < sample={sample} on a "
                 f"corpus of {n} — the draw must cover `sample` rows (or the "
                 "whole corpus) to be result-identical"
+            )
+        if len(sample_x) < sample and n is None:
+            warnings.warn(
+                f"sample_x has {len(sample_x)} rows < sample={sample} and "
+                "n is None, so whether it holds the whole corpus (the only "
+                "result-identical short draw) is unchecked; pass n",
+                stacklevel=2,
             )
         x = np.asarray(sample_x, dtype=np.float64)[:sample]
     else:

@@ -1,15 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
-North-star extension (BASELINE.json): approximate-nearest-neighbor over the
-`embeddings` table.  Two tiers:
+North-star extension (BASELINE.json): similarity search over the
+`embeddings` table.
 
 - brute-force cosine top-k: exact baseline; F.zip_with/F.aggregate dot
   product, JVM-side, no UDF.  O(N) per query but embarrassingly parallel
   and shuffle-free until the final top-k (a TakeOrdered, not a full sort).
-- LSH-bucketed (random hyperplane signs) variant: at 100 TB, brute force
-  per query is a full scan; bucketing by sign-pattern restricts candidates
-  to colliding buckets.  Deterministic hyperplanes derived from xxhash64 so
-  results are reproducible without a stored model.
+  The per-query scale path (probe a few inverted lists instead of a full
+  scan) is operators/ivf.py.
+- all-pairs cosine join (all_pairs_above): multi-table random-hyperplane
+  LSH buckets restrict candidates to colliding buckets, then exact cosine
+  rescores them.  Deterministic splitmix64 hyperplanes, so results are
+  reproducible without a stored model.
 """
 
 from __future__ import annotations
@@ -88,8 +90,9 @@ def brute_force_topk(
 
 def _plane_components(plane_seed: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane components in [-1, 1] via
-    splitmix64 of (seed, j) — computed ONCE in Python and embedded as an
-    array literal, so the executor never re-derives the plane per row."""
+    splitmix64 of (seed, j) — computed ONCE in Python on the driver and
+    shipped in the UDF closure's plane matrix, so the executor never
+    re-derives a plane per row."""
     comps = []
     for j in range(dim):
         x = ((plane_seed * 1315423911 + j) * 0x9E3779B97F4A7C15 + 0xBF58476D1CE4E5B9) % (1 << 64)
@@ -100,56 +103,11 @@ def _plane_components(plane_seed: int, dim: int) -> list[float]:
     return comps
 
 
-def _hyperplane_sign(vec: Column, plane_seed: int, dim: int) -> Column:
-    """Sign bit of <vec, h> for the deterministic hyperplane `plane_seed`."""
-    h = F.array(*[F.lit(c) for c in _plane_components(plane_seed, dim)])
-    return F.when(dot(vec.cast("array<double>"), h) >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
-def lsh_bucket(vec: Column, dim: int, num_planes: int = 8, table: int = 0) -> Column:
-    """Random-hyperplane LSH bucket id: the concatenated sign bits.  `table`
-    offsets the plane seeds so independent hash tables can be built."""
-    bucket = F.lit(0)
-    for p in range(num_planes):
-        bucket = bucket * 2 + _hyperplane_sign(vec, table * 1009 + p, dim)
-    return bucket
-
-
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    num_planes: int = 6,
-) -> DataFrame:
-    """ANN top-k: score only rows whose LSH bucket matches the query's.
-
-    Bucket assignment is a pure column expression, so at scale it can also be
-    used as a parquet partition column making the candidate fetch a
-    partition-pruned scan instead of a full pass.
-    """
-    dim = len(query_vec)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    with_bucket = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        lsh_bucket(F.col(vec_col), dim, num_planes).alias("__bucket"),
-    )
-    query_bucket = lsh_bucket(q, dim, num_planes)
-    candidates = with_bucket.filter(F.col("__bucket") == query_bucket)
-    scored = candidates.select(
-        F.col(id_col),
-        cosine(F.col(vec_col).cast("array<double>"), q).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
-
-
 def make_bucket_udf(num_planes: int, num_tables: int, dim: int):
     """Arrow-vectorized vec→[bucket per table] pandas_udf: ONE numpy matmul
     against the (tables×planes, dim) plane matrix per batch, then sign-bit
-    packing — replaces tables×planes interpreted HOF dot products per row.
-    Uses the same deterministic _plane_components as the column path."""
+    packing — no interpreted HOF dot products per row.  Planes come from
+    the deterministic _plane_components."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 

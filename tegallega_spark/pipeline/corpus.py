@@ -89,36 +89,27 @@ def _auto_stage_boundary_dir(docs: DataFrame) -> tuple[str | None, object]:
     plan_size_bytes estimate projects the spill, which is compared
     against free temp-disk space; no-op outside that regime.  Returns
     (dir_or_None, release_handle_or_None); the dir is a fresh temp
-    directory owned by the returned handle.
-
-    TEGALLEGA_STAGE_BOUNDARY overrides: 'off'/'0'/'never' disables,
-    'always'/'1'/'on' forces, anything else (default 'auto') gates on
-    projected spill vs free disk."""
-    import os
+    directory owned by the returned handle."""
     import shutil
     import tempfile
 
-    mode = os.environ.get("TEGALLEGA_STAGE_BOUNDARY", "auto").lower()
-    if mode in ("0", "off", "never", "false"):
+    try:
+        size = plan_size_bytes(docs)
+        # _SPILL_FACTOR was calibrated against zstd-parquet scan
+        # bytes; in-memory roots (createDataFrame → LocalRelation /
+        # LogicalRDD) report a size estimate ~17× below that calibration
+        # (measured in the r10 stress harness), so without a
+        # correction the ENOSPC gate silently stays off in exactly
+        # the regime it protects (r10 ADVICE).  16× multiplier when
+        # the lineage is not scan-rooted.
+        plan_str = str(docs._jdf.queryExecution().analyzed())
+        if "LocalRelation" in plan_str or "LogicalRDD" in plan_str:
+            size *= 16
+        free = shutil.disk_usage(tempfile.gettempdir()).free
+    except Exception:
         return None, None
-    if mode not in ("1", "on", "always", "true"):
-        try:
-            size = plan_size_bytes(docs)
-            # _SPILL_FACTOR was calibrated against zstd-parquet scan
-            # bytes; in-memory roots (createDataFrame → LocalRelation /
-            # LogicalRDD) report a size estimate ~17× below that calibration
-            # (measured in the r10 stress harness), so without a
-            # correction the ENOSPC gate silently stays off in exactly
-            # the regime it protects (r10 ADVICE).  16× multiplier when
-            # the lineage is not scan-rooted.
-            plan_str = str(docs._jdf.queryExecution().analyzed())
-            if "LocalRelation" in plan_str or "LogicalRDD" in plan_str:
-                size *= 16
-            free = shutil.disk_usage(tempfile.gettempdir()).free
-        except Exception:
-            return None, None
-        if not stage_boundaries_needed(size, free):
-            return None, None
+    if not stage_boundaries_needed(size, free):
+        return None, None
     path = tempfile.mkdtemp(prefix="tegallega_stage_boundaries_")
     return path, _StageBoundaryDirHandle(path)
 
@@ -147,8 +138,7 @@ def _stage_boundary(df: DataFrame, path: str, handles=()) -> DataFrame:
     latency, is the binding constraint.  Since r10, clean_corpus gates
     this automatically (stage_boundaries_needed: projected spill vs free
     disk) when the text-cut stages are enabled and no explicit dir is
-    passed; an explicit `stage_boundary_dir` always forces it, and
-    TEGALLEGA_STAGE_BOUNDARY=off/always overrides the gate."""
+    passed; an explicit `stage_boundary_dir` always forces it."""
     spark = df.sparkSession
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
     for h in handles:
@@ -311,7 +301,7 @@ def clean_corpus(
     scratch disk — the regime where the 3.2 M-doc race hit ENOSPC with
     the old opt-in default.  The auto directory is temp-created and
     removed by release_intermediates(result).  An explicit path always
-    forces boundaries on; TEGALLEGA_STAGE_BOUNDARY=off|always overrides.
+    forces boundaries on.
     """
     # Auto stage boundaries (r9 verdict #6): when the caller passes no
     # explicit dir AND the pipeline has the multi-wave text-cut stages

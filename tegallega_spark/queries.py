@@ -313,10 +313,33 @@ def q08(spark, sf_dir):
     2-decimal by construction (probe: round(price,2) == round(price*100)
     / 100.0 on EVERY row at all SFs), so cents/100.0 reproduces the old
     round(price, 2) double bit-for-bit (both are the correctly-rounded
-    double of the same 2-decimal value)."""
+    double of the same 2-decimal value).
+
+    The packing is only order-preserving for prices that are
+    non-negative, exactly 2-decimal (cents/100.0 gives the price back)
+    and under 2^31 cents, with non-negative line numbers.  A row that
+    breaks this raises inside the same codegen projection — no extra
+    job, and never a silently wrong argmin."""
     l = T(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
-    packed = cents * F.lit(1 << 32).cast("long") + F.col("l_linenumber").cast("long")
+    price = F.col("l_extendedprice")
+    line = F.col("l_linenumber")
+    cents = F.round(price * 100, 0).cast("long")
+    unpackable = (
+        (cents < 0)
+        | (cents >= F.lit(1 << 31).cast("long"))
+        | (cents.cast("double") / F.lit(100.0) != price)
+        | (line < 0)
+    )
+    packed = F.when(
+        unpackable,
+        F.raise_error(
+            F.concat(
+                F.lit("q08 cannot pack l_extendedprice="), price.cast("string"),
+                F.lit(" l_linenumber="), line.cast("string"),
+                F.lit(": needs a non-negative 2-decimal price under 2^31 cents"),
+            )
+        ),
+    ).otherwise(cents * F.lit(1 << 32).cast("long") + line.cast("long"))
     g = l.groupBy("l_orderkey").agg(
         F.min(packed).alias("__mn"), F.max(packed).alias("__mx")
     )
@@ -1240,7 +1263,7 @@ def q36(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     pairs = D.simhash_near_duplicates_verified(
         d, "doc_id", "text", shingle_n=2, max_hamming=12, bands=13,
-        jaccard_threshold=0.7, hash_fn="md5",
+        jaccard_threshold=0.7,
     )
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 

@@ -36,10 +36,31 @@ from tegallega_spark.operators.dedup import (
 from tegallega_spark.session import release_intermediates
 
 PAIR_SCHEMA = "id_a bigint, id_b bigint, band_idx int"
-# Shard state: the shard's buckets as parallel arrays — bucket band
-# hashes, all bucket id lists flattened, and offsets delimiting each
-# bucket's slice of the flat list (len(offsets) == len(hashes) + 1).
-STATE_SCHEMA = "hashes array<bigint>, flat_ids array<bigint>, offsets array<int>"
+# Shard state: a format version, then the shard's buckets as parallel
+# arrays — bucket band hashes, all bucket id lists flattened, and offsets
+# delimiting each bucket's slice of the flat list
+# (len(offsets) == len(hashes) + 1).  A checkpoint of another schema is
+# rejected by Spark's state-schema check when the query starts; one of
+# the same schema but another STATE_VERSION is rejected by the matcher
+# on its first read — bump the version whenever the state's meaning
+# changes under an unchanged schema (the grouping key, say).
+STATE_VERSION = 1
+STATE_SCHEMA = (
+    "version int, hashes array<bigint>, flat_ids array<bigint>, offsets array<int>"
+)
+# State is keyed by (band_idx, band_hash mod STATE_SHARDS), not by raw
+# bucket — per-bucket matching semantics are unchanged (each shard's state
+# holds its buckets' id lists), but the per-trigger applyInPandasWithState
+# GROUP count is bounded at bands × STATE_SHARDS instead of one group per
+# distinct bucket.  The old keying paid ~3.7 ms of Python-call +
+# pandas-construction overhead per bucket per trigger (the stress race's
+# measured wall).  128 is the measured knee of the 40k-doc stress race
+# (433 → 819 docs/s; 1024 shards measured 526 — with ~19k distinct
+# buckets per trigger nearly every shard was still hit, so the group
+# count barely dropped).  A shard's state value grows linearly with
+# corpus buckets, so raise it with corpus scale; changing it invalidates
+# existing checkpoints (different grouping key), so bump STATE_VERSION too.
+STATE_SHARDS = 128
 
 
 def _make_shard_matcher(max_ids: int):
@@ -54,13 +75,19 @@ def _make_shard_matcher(max_ids: int):
     Python calls + pandas frame constructions per ~1k-doc trigger at
     ~3.7 ms each (the stress race's measured wall, 92 s for 40k docs).
     Sharding the hash space bounds the per-trigger group count at
-    bands × state_shards while keeping bucket semantics bit-identical."""
+    bands × STATE_SHARDS while keeping bucket semantics bit-identical."""
 
     def _match(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
         if state.exists:
-            hs, flat, offs = state.get
+            version, hs, flat, offs = state.get
+            if version != STATE_VERSION:
+                raise ValueError(
+                    f"neardup stream state has format version {version}, "
+                    f"this code reads version {STATE_VERSION}: start from a "
+                    "fresh checkpoint"
+                )
             table: dict[int, list[int]] = {
                 int(h): [int(x) for x in flat[offs[i]:offs[i + 1]]]
                 for i, h in enumerate(hs)
@@ -96,7 +123,7 @@ def _make_shard_matcher(max_ids: int):
             hs_out.append(h)
             flat_out.extend(ids)
             offs_out.append(len(flat_out))
-        state.update((hs_out, flat_out, offs_out))
+        state.update((STATE_VERSION, hs_out, flat_out, offs_out))
         if out:
             yield pd.DataFrame(out, columns=["id_a", "id_b", "band_idx"])
 
@@ -111,39 +138,18 @@ def neardup_candidates_stream(
     num_hashes: int = 32,
     bands: int = 16,
     max_ids_per_bucket: int = 1024,
-    state_shards: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b, band_idx) candidate pairs; distinct (id_a, id_b) over
     the stream equals the batch `_pairs_from_band_hashes` candidate set for
     the same corpus (while bucket state stays within max_ids_per_bucket).
-
-    state_shards (r14): state is keyed by (band_idx, band_hash mod
-    state_shards), not by raw bucket — per-bucket matching semantics are
-    unchanged (each shard's state holds its buckets' id lists), but the
-    per-trigger applyInPandasWithState GROUP count is bounded at
-    bands × state_shards instead of one group per distinct bucket.  The
-    old keying paid ~3.7 ms of Python-call + pandas-construction overhead
-    per bucket per trigger (the stress race's measured wall).  Size it so
-    a shard's state value stays comfortably row-sized:
-    expected buckets / (bands × state_shards) ≈ tens of buckets per
-    shard; raise it with corpus scale (the per-shard value grows linearly
-    with corpus buckets at fixed shards).  Changing it invalidates
-    existing checkpoints (different grouping key).  Default: the
-    SPARK_GRAFT_STREAM_STATE_SHARDS env knob, else 128 — the measured
-    knee of the 40k-doc stress race (433 → 819 docs/s; 1024 shards
-    measured 526 — with ~19k distinct buckets per trigger nearly every
-    shard was still hit, so the group count barely dropped).
+    State is sharded STATE_SHARDS ways per band (see STATE_SHARDS).
     """
-    if state_shards is None:
-        import os
-
-        state_shards = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_SHARDS", "128"))
     bh_udf = make_band_hash_udf(shingle_n, num_hashes, bands)
     banded = docs.select(
         F.col(id_col).alias("doc_id"), bh_udf(F.col(text_col)).alias("__bh")
     ).select("doc_id", F.posexplode("__bh").alias("band_idx", "band_hash"))
     banded = banded.withColumn(
-        "__shard", F.pmod(F.col("band_hash"), F.lit(int(state_shards)))
+        "__shard", F.pmod(F.col("band_hash"), F.lit(STATE_SHARDS))
     )
     return banded.groupBy("band_idx", "__shard").applyInPandasWithState(
         _make_shard_matcher(max_ids_per_bucket),

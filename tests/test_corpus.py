@@ -497,12 +497,13 @@ def test_stage_boundary_auto_gate_regimes(spark, monkeypatch, tmp_path):
     """r9 verdict #6: stage boundaries are size-gated by default.  Pin the
     pure decision at both regimes (3.2 M-race numbers: ~1.3 GB input ×
     64 projected spill vs 75 GB free → ON; a 5 k-doc toy input → OFF),
-    then the plumbing: forced-on via env writes real boundary parquet
+    then the plumbing: forced-on gate writes real boundary parquet
     into an auto temp dir whose handle release_intermediates removes;
     default auto stays OFF for a toy corpus (identical rows, no temp dir)."""
     import glob
     import os
 
+    from tegallega_spark.pipeline import corpus as corpus_mod
     from tegallega_spark.pipeline.corpus import stage_boundaries_needed
     from tegallega_spark.session import release_intermediates
 
@@ -527,15 +528,14 @@ def test_stage_boundary_auto_gate_regimes(spark, monkeypatch, tmp_path):
     before = set(glob.glob("/tmp/tegallega_stage_boundaries_*"))
 
     # default auto on a toy corpus: gate stays off, no temp dir appears
-    monkeypatch.delenv("TEGALLEGA_STAGE_BOUNDARY", raising=False)
     base = clean_corpus(docs, **kwargs)
     base_rows = sorted(map(tuple, base.collect()))
     release_intermediates(base)
     assert set(glob.glob("/tmp/tegallega_stage_boundaries_*")) == before
 
-    # forced on (the at-scale regime, exercised via the env override):
+    # forced on (the at-scale regime, exercised by forcing the gate):
     # same rows, real parquet in an auto dir, dir removed on release
-    monkeypatch.setenv("TEGALLEGA_STAGE_BOUNDARY", "always")
+    monkeypatch.setattr(corpus_mod, "stage_boundaries_needed", lambda *a: True)
     out = clean_corpus(docs, **kwargs)
     rows = sorted(map(tuple, out.collect()))
     assert rows == base_rows

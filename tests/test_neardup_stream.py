@@ -142,6 +142,80 @@ def test_stream_verified_pairs_match_batch(spark, tmp_path):
     assert got == want
 
 
+def _run_candidates(spark, feed, ckpt, sink, cands=None):
+    stream = spark.readStream.schema(DOC_SCHEMA).parquet(f"{feed}/*.parquet")
+    q = (
+        (cands(stream) if cands else neardup_candidates_stream(stream))
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def test_old_state_schema_rejected_at_startup(spark, tmp_path):
+    """A checkpoint whose state predates STATE_SCHEMA's version field
+    (the r14 layout) must fail when the query starts, not be misread:
+    Spark's own state-schema check rejects the different value schema."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from tegallega_spark.streaming import neardup_stream as NS
+
+    old_schema = "hashes array<bigint>, flat_ids array<bigint>, offsets array<int>"
+
+    def old_matcher(key, pdfs, state):
+        for _ in pdfs:
+            pass
+        state.update(([1], [2], [0, 1]))
+        return iter([])
+
+    def old_candidates(stream):
+        bh_udf = make_band_hash_udf(3, 32, 16)
+        banded = stream.select(
+            "doc_id", F.posexplode(bh_udf(F.col("text"))).alias("band_idx", "band_hash")
+        ).withColumn("__shard", F.pmod(F.col("band_hash"), F.lit(NS.STATE_SHARDS)))
+        return banded.groupBy("band_idx", "__shard").applyInPandasWithState(
+            old_matcher,
+            outputStructType=NS.PAIR_SCHEMA,
+            stateStructType=old_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    feed, ckpt, sink = tmp_path / "feed", str(tmp_path / "ckpt"), str(tmp_path / "sink")
+    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(str(feed / "d1.parquet"))
+    _run_candidates(spark, feed, ckpt, sink, old_candidates)
+    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(str(feed / "d2.parquet"))
+    with pytest.raises(StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        _run_candidates(spark, feed, ckpt, sink)
+
+
+def test_other_state_version_rejected(spark, tmp_path, monkeypatch):
+    """State of the same schema but another STATE_VERSION (a format change
+    the schema cannot show) fails on its first read instead of being
+    misread."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from tegallega_spark.streaming import neardup_stream as NS
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    feed, ckpt, sink = tmp_path / "feed", str(tmp_path / "ckpt"), str(tmp_path / "sink")
+    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(str(feed / "d1.parquet"))
+    with monkeypatch.context() as m:
+        m.setattr(NS, "STATE_VERSION", NS.STATE_VERSION + 1)
+        _run_candidates(spark, feed, ckpt, sink)
+    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(str(feed / "d2.parquet"))
+    with pytest.raises(StreamingQueryException, match="format version"):
+        _run_candidates(spark, feed, ckpt, sink)
+
+
 import os
 
 import pytest

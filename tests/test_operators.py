@@ -12,7 +12,6 @@ from tegallega_spark.operators import multimodal as MM
 from tegallega_spark.operators.dedup import (
     dedup_keep_first,
     dedup_keep_last,
-    minhash_near_duplicates,
 )
 from tegallega_spark.operators.spatial import (
     interpolate_virtual_stops,
@@ -202,20 +201,6 @@ def test_dedup_first_and_last(spark):
     assert last == {"k1": "b", "k2": "c"}
 
 
-def test_minhash_finds_planted_near_dups(spark):
-    base = "the quick brown fox jumps over the lazy dog again and again " * 5
-    docs = [
-        (1, base),
-        (2, base + " tiny tail change"),
-        (3, "completely different content about spark engines and parquet files " * 5),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = minhash_near_duplicates(df, "doc_id", "text", jaccard_threshold=0.5).collect()
-    found = {(r.id_a, r.id_b) for r in pairs}
-    assert (1, 2) in found
-    assert all(3 not in p for p in found)
-
-
 # ---------------------------------------------------------------------------
 # multimodal plumbing
 # ---------------------------------------------------------------------------
@@ -239,32 +224,14 @@ def test_frame_sample_shape(spark, sf_dir):
     assert all(r.frame_idx == 0 for r in out)
 
 
-def test_mllib_minhash_agrees_on_planted_dups(spark):
-    from tegallega_spark.operators.dedup import minhash_near_duplicates_mllib
-
-    base = "the quick brown fox jumps over the lazy dog again and again " * 5
-    docs = [
-        (1, base),
-        (2, base + " tiny tail change"),
-        (3, "completely different content about spark engines and parquet files " * 5),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = minhash_near_duplicates_mllib(
-        df, "doc_id", "text", jaccard_threshold=0.5
-    ).collect()
-    found = {(r.id_a, r.id_b) for r in pairs}
-    assert (1, 2) in found
-    assert all(3 not in p for p in found)
-
-
 def test_verified_neardups_equal_exact_sets(spark, sf_dir):
     """The falsifiability contract behind q35/q36 (minhash/simhash): LSH
     candidates + exact-Jaccard recompute must equal the exact all-pairs
     result on the test corpus — a missed pair or wrong score is an oracle
     mismatch, not a silent grey row."""
     from tegallega_spark.operators.dedup import (
+        exact_shingle_jaccard_pairs,
         minhash_near_duplicates_verified,
-        ngram_jaccard_pairs,
         simhash_near_duplicates_verified,
     )
 
@@ -277,7 +244,9 @@ def test_verified_neardups_equal_exact_sets(spark, sf_dir):
     }
     ex3 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in ngram_jaccard_pairs(d, "doc_id", "text", 3, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(
+            d, "doc_id", "text", 3, 0.7, single_task=False
+        ).collect()
     }
     assert mh == ex3 and len(mh) > 0
     sh = {
@@ -288,22 +257,25 @@ def test_verified_neardups_equal_exact_sets(spark, sf_dir):
     }
     ex2 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in ngram_jaccard_pairs(d, "doc_id", "text", 2, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(
+            d, "doc_id", "text", 2, 0.7, single_task=False
+        ).collect()
     }
     assert sh == ex2 and len(sh) > 0
 
 
 def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
-    """r9: the md5 hash family (q36's oracle-replayable variant) — the
-    Spark fingerprint must equal a pure-python rederivation of the SAME
-    spec (lower, [^a-z0-9]+ split, distinct 2-shingles, first-15-hex-chars
-    md5 → 60-bit int, per-bit ±1 sums), and the md5 verified pair set must
-    still equal the exact set on the smoke corpus."""
+    """r9: the md5 hash family (q36's oracle-replayable form, and the only
+    SimHash fingerprint) — the Spark fingerprint must equal a pure-python
+    rederivation of the SAME spec (lower, [^a-z0-9]+ split, distinct
+    2-shingles, first-15-hex-chars md5 → 60-bit int, per-bit ±1 sums), and
+    the md5 verified pair set must still equal the exact set on the smoke
+    corpus."""
     import hashlib
     import re as _re
 
     from tegallega_spark.operators.dedup import (
-        ngram_jaccard_pairs,
+        exact_shingle_jaccard_pairs,
         simhash_fingerprints,
         simhash_near_duplicates_verified,
     )
@@ -311,9 +283,7 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").limit(50)
     got = {
         r["__id"]: r["__fp"]
-        for r in simhash_fingerprints(
-            d, "doc_id", "text", 2, use_arrow=True, hash_fn="md5"
-        ).collect()
+        for r in simhash_fingerprints(d, "doc_id", "text", 2).collect()
     }
     for row in d.select("doc_id", "text").collect():
         words = [w for w in _re.split(r"[^a-z0-9]+", (row.text or "").lower()) if w]
@@ -333,38 +303,16 @@ def test_md5_simhash_fingerprints_rederivable(spark, sf_dir):
     md5_pairs = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
         for r in simhash_near_duplicates_verified(
-            full, "doc_id", "text", shingle_n=2, jaccard_threshold=0.7,
-            hash_fn="md5",
+            full, "doc_id", "text", shingle_n=2, jaccard_threshold=0.7
         ).collect()
     }
     ex2 = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in ngram_jaccard_pairs(full, "doc_id", "text", 2, 0.7).collect()
+        for r in exact_shingle_jaccard_pairs(
+            full, "doc_id", "text", 2, 0.7, single_task=False
+        ).collect()
     }
     assert md5_pairs == ex2 and len(md5_pairs) > 0
-
-
-def test_md5_simhash_no_arrow_fallback_bit_identical(spark, sf_dir):
-    """r9 ADVICE: hash_fn='md5' with use_arrow=False used to silently get
-    the Arrow bitsum UDF anyway.  Now it takes the pure-column fold
-    (md5_simhash_column) — pin that path bit-identical to the Arrow pass
-    over real documents."""
-    from tegallega_spark.operators.dedup import simhash_fingerprints
-
-    d = load_table(spark, sf_dir, "documents").limit(40)
-    arrow = {
-        r["__id"]: r["__fp"]
-        for r in simhash_fingerprints(
-            d, "doc_id", "text", 2, use_arrow=True, hash_fn="md5"
-        ).collect()
-    }
-    cols = {
-        r["__id"]: r["__fp"]
-        for r in simhash_fingerprints(
-            d, "doc_id", "text", 2, use_arrow=False, hash_fn="md5"
-        ).collect()
-    }
-    assert cols == arrow and len(cols) == 40
 
 
 def test_embedding_all_pairs_equals_brute_force(spark, sf_dir):
@@ -395,20 +343,6 @@ def test_embedding_all_pairs_equals_brute_force(spark, sf_dir):
         .collect()
     }
     assert got == exact and len(got) > 0
-
-
-def test_lsh_topk_contains_query_vector(spark, sf_dir):
-    from tegallega_spark.operators.similarity import brute_force_topk, lsh_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qrow = emb.orderBy("vec_id").first()
-    qv = [float(x) for x in qrow["embedding"]]
-    approx = lsh_topk(emb, qv, k=5, num_planes=4).collect()
-    # the query vector is always in its own bucket → rank 1, cos ≈ 1
-    assert approx[0]["vec_id"] == qrow["vec_id"]
-    assert abs(approx[0]["cos_sim"] - 1.0) < 1e-9
-    exact = brute_force_topk(emb, qv, k=5).collect()
-    assert exact[0]["vec_id"] == qrow["vec_id"]
 
 
 def test_text_sketches(spark):

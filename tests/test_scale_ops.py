@@ -124,6 +124,26 @@ def test_ivf_search_recall(spark):
     assert top[0]["vec_id"] == qrow["vec_id"]  # the query vector itself
 
 
+
+def test_short_ivf_sample_without_n_warns():
+    """A caller-supplied draw shorter than `sample` is result-identical
+    only when it holds the whole corpus; with n=None that cannot be
+    checked, so training warns instead of staying silent."""
+    import warnings
+
+    import numpy as np
+    import pytest
+
+    from tegallega_spark.operators.ivf import train_centroids_sampled
+
+    x = np.random.default_rng(0).normal(size=(40, 4))
+    with pytest.warns(UserWarning, match="pass n"):
+        warned = train_centroids_sampled(None, k=4, sample=64, sample_x=x)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        quiet = train_centroids_sampled(None, k=4, sample=64, sample_x=x, n=40)
+    assert np.array_equal(warned, quiet)
+
 def test_stateful_stream_thinning_matches_batch(spark, sf_dir):
     """applyInPandasWithState over AvailableNow equals the batch q46 fold."""
     from tegallega_spark.queries import SPARK_QUERIES
@@ -173,6 +193,37 @@ def test_thinning_exchange_sized_from_input_bytes(spark, sf_dir, monkeypatch):
     assert wide.rdd.getNumPartitions() > dp
     assert {(r.user_id, r.event_id) for r in wide.collect()} == rows
 
+
+
+def test_q08_rejects_unpackable_prices(spark, tmp_path):
+    """q08 packs (cents, line) into one long, which is only order-preserving
+    for non-negative, exactly 2-decimal prices under 2^31 cents and
+    non-negative line numbers.  A row that breaks the packing must fail
+    the query loudly instead of producing a wrong argmin; clean 2-decimal
+    prices still pack."""
+    import pytest
+    from pyspark.errors import PySparkException
+
+    from tegallega_spark.queries import SPARK_QUERIES
+
+    q08 = SPARK_QUERIES["q08_argminmax_join"]
+    schema = "l_orderkey bigint, l_linenumber int, l_extendedprice double"
+    clean = [(1, 1, 901.0), (1, 2, 17.25), (2, 1, 0.07)]
+
+    def run(rows, name):
+        sf_dir = str(tmp_path / name)
+        spark.createDataFrame(rows, schema).write.parquet(f"{sf_dir}/lineitem.parquet")
+        return sorted(map(tuple, q08(spark, sf_dir).collect()))
+
+    assert run(clean, "clean") == [(1, 2, 17.25, 1, 901.0), (2, 1, 0.07, 1, 0.07)]
+    bad_rows = {
+        "three_decimals": (3, 1, 17.255),
+        "negative_price": (3, 1, -3.5),
+        "negative_line": (3, -1, 5.0),
+    }
+    for name, bad in bad_rows.items():
+        with pytest.raises(PySparkException, match="q08 cannot pack"):
+            run(clean + [bad], name)
 
 def test_incremental_partition_overwrite(spark, tmp_path):
     """SURVEY §2.10: only changed relations are rewritten; unchanged
