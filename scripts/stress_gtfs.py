@@ -161,13 +161,13 @@ def time_spark(root: str, spark=None, sink_dir: str | None = None
     spark=None a fresh session is created and its one-time warmup lands
     inside the measured run.
 
-    sink_dir: when set, every table is written through the REAL K1 CSV
-    sink (sources.gtfs.write_gtfs_table — parallel part write + ordered
-    driver concat) instead of noop, so the measured wall includes full
-    CSV serialization + final file assembly, symmetric with the
-    reference script which always writes its 7 .txt files (r11 verdict
-    #8: the end-to-end race wrote noop, leaving the sink's share of the
-    flagship number invisible outside the isolated sink measurement)."""
+    sink_dir: when set, the feed is written through the REAL K1 CSV
+    sink (sources.gtfs.write_gtfs_feed — the seven tables as concurrent
+    jobs, each a parallel part write + ordered driver concat), so the
+    measured wall includes full CSV serialization + final file assembly,
+    symmetric with the reference script which always writes its 7 .txt
+    files.  Without it each table is materialized in turn through the
+    noop format (stop_times by `count()`, which gives the row count)."""
     from tegallega_spark.pipeline.gtfs_build import build_gtfs
 
     own_session = spark is None
@@ -175,51 +175,25 @@ def time_spark(root: str, spark=None, sink_dir: str | None = None
         spark = make_session(root)
     else:
         spark.catalog.clearCache()  # every run recomputes the full DAG
-    from concurrent.futures import ThreadPoolExecutor
 
     t0 = time.time()
-    # materialize ALL shared persisted upstreams (catalog, stops_raw,
-    # shapes) CONCURRENTLY with the construction of the remaining table
-    # plans: those jobs are cluster work, plan construction is driver/py4j
-    # work — serializing them (the old flow) wasted the cache-warm jobs'
-    # wall-clock inside whichever output job touched each cache first
-    pre = ThreadPoolExecutor(max_workers=3)
-    warm = []
-    tables = build_gtfs(
-        spark, root,
-        on_shapes=lambda s: warm.append(pre.submit(s.count)),
-        on_cached=lambda _name, df: warm.append(pre.submit(df.count)),
-    )
-    # the 7 sinks are independent outputs — run them as concurrent jobs
-    # (Spark's scheduler interleaves them; the shared persisted upstreams
-    # are computed once by whichever job touches them first).  The
-    # reference writes its 7 files sequentially because it is a single
-    # Python process; concurrent actions are part of the engine.
-    for f in warm:  # caches ready before concurrent first-touch
-        f.result()
+    tables = build_gtfs(spark, root)
+    if sink_dir is not None:
+        from tegallega_spark.sources.gtfs import write_gtfs_feed
 
-    def write(item):
-        name, df = item
-        if sink_dir is not None:
-            from tegallega_spark.sources.gtfs import write_gtfs_table
-
-            write_gtfs_table(df, name, sink_dir)
-            return None
-        if name == "stop_times":
-            return df.count()
-        df.write.format("noop").mode("overwrite").save()
-        return None
-
-    with ThreadPoolExecutor(max_workers=len(tables)) as ex:
-        results = list(ex.map(write, tables.items()))
+        write_gtfs_feed(tables, sink_dir)
+    else:
+        for name, df in tables.items():
+            if name == "stop_times":
+                n = df.count()
+            else:
+                df.write.format("noop").mode("overwrite").save()
     dt = time.time() - t0
     if sink_dir is not None:
         # row count read back from the written file, untimed — symmetric
         # with time_reference, which also counts after the clock stops
         with open(os.path.join(sink_dir, "stop_times.txt")) as f:
             n = sum(1 for _ in f) - 1
-    else:
-        n = next(r for r in results if r is not None)
     if own_session:
         spark.stop()
     return dt, n

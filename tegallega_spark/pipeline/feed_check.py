@@ -9,22 +9,29 @@ a jar or a graph).  What OTP's GTFS loader would do first, though, is
 public knowledge — the GTFS static spec's referential rules, which OTP
 enforces at graph-build time (unknown stop/trip/route/service references
 are load errors; see also the FIXTURES.md attempt log).  This module
-implements those checks as Spark anti-joins over the WRITTEN feed files,
-so the gtfs.zip we hand an external OTP is known-loadable before it
-leaves the pipeline.
+counts violations of those rules over the WRITTEN feed files, so the
+gtfs.zip we hand an external OTP is known-loadable before it leaves the
+pipeline.
 
-Scale design: every check is a left-anti join or a grouped count —
-dimension sides (trips' distinct service_ids, routes, agency) are small
-and broadcast; the fact side (stop_times, shapes) streams through one
-hash join each, no collect anywhere.  On a 100 TB feed lake the same
-plan validates each feed partition independently.
+Scale design: the whole check is ONE Spark action.  Each fact table
+(stop_times, trips, routes, stops) is left-joined with the distinct key
+set of every dimension it references, tagged with a constant flag; a
+row whose non-empty key finds no flag is exactly the row a left-anti
+join would keep.  All of a table's rules are then `count_if`s of one
+global aggregate over that joined stream.  Each duplicate-sequence rule
+is a grouped count followed by `count_if(count > 1)`.  The single-row
+aggregates are cross-joined and collected once.  Dimension key sets are
+small and broadcast; the fact sides stream, and nothing but the one
+counter row reaches the driver.  The tables are read with header-derived
+schemas, so no schema-inference job runs either.  On a 100 TB feed lake
+the same plan validates each feed partition independently.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tegallega_spark.sources.gtfs import read_gtfs_table
@@ -34,19 +41,41 @@ from tegallega_spark.sources.gtfs import read_gtfs_table
 _TIME_RE = r"^\d{1,3}:[0-5]\d:[0-5]\d$"
 
 
-def _anti_count(fact: DataFrame, dim: DataFrame, fact_col: str,
-                dim_col: str) -> int:
-    """Rows of `fact` whose fact_col has no match in dim.dim_col.
-    Nulls/empties are not dangling references (optional fields)."""
-    return (
-        fact.filter(F.col(fact_col).isNotNull() & (F.col(fact_col) != ""))
-        .join(
-            dim.select(F.col(dim_col).alias(fact_col)).distinct(),
-            fact_col,
-            "left_anti",
-        )
-        .count()
-    )
+def _present(c: str) -> Column:
+    """Nulls/empties are not dangling references (optional fields)."""
+    return F.col(c).isNotNull() & (F.col(c) != "")
+
+
+def _with_refs(fact: DataFrame, refs: dict[str, tuple[DataFrame, str]]
+               ) -> tuple[DataFrame, dict[str, Column]]:
+    """`fact` left-joined with the distinct key set of each referenced
+    dimension (refs: check name -> (dim, column)), plus per check the
+    condition "this row's non-empty key has no match" — the rows a
+    left-anti join against the dimension would count."""
+    dangling = {}
+    for i, (name, (dim, col)) in enumerate(refs.items()):
+        hit = f"__hit{i}"
+        keys = dim.select(col).distinct().withColumn(hit, F.lit(True))
+        fact = fact.join(keys, col, "left")
+        dangling[name] = _present(col) & F.col(hit).isNull()
+    return fact, dangling
+
+
+def _duplicate_count(df: DataFrame, name: str, *key: str) -> DataFrame:
+    """One row: the number of keys that occur more than once."""
+    return df.groupBy(*key).count().agg(
+        F.count_if(F.col("count") > 1).alias(name))
+
+
+def _seconds(c: str) -> Column:
+    # `get` and try_cast, not `[i]` and cast: a malformed time (already
+    # counted by stop_times_bad_time) must NULL out of the comparison,
+    # not ANSI-throw the whole validation — `[1]` of "12".split(":")
+    # throws INVALID_ARRAY_INDEX under ANSI
+    hms = F.split(c, ":")
+    return (F.get(hms, 0).try_cast("int") * 3600
+            + F.get(hms, 1).try_cast("int") * 60
+            + F.get(hms, 2).try_cast("int"))
 
 
 # GTFS-required tables; calendar is special-cased (calendar.txt OR
@@ -80,77 +109,72 @@ def validate_gtfs_feed(spark: SparkSession, feed_dir: str) -> dict[str, int]:
     out["missing_table_calendar"] = int(
         "calendar" not in t and "calendar_dates" not in t
     )
+    counters: list[DataFrame] = []
 
-    def have(*names: str) -> bool:
-        return all(n in t for n in names)
+    def count_rules(fact: str, refs: dict[str, tuple[DataFrame, str]],
+                    rules: dict[str, Column]) -> None:
+        """One aggregate over table `fact` joined with its references."""
+        df, dangling = _with_refs(t[fact], refs)
+        rules = {**dangling, **rules}
+        if rules:
+            counters.append(df.agg(*[F.count_if(cond).alias(name)
+                                     for name, cond in rules.items()]))
 
-    # dangling references (OTP load errors)
-    if have("stop_times", "trips"):
-        out["stop_times_unknown_trip"] = _anti_count(
-            t["stop_times"], t["trips"], "trip_id", "trip_id")
-        out["trips_without_stop_times"] = _anti_count(
-            t["trips"], t["stop_times"], "trip_id", "trip_id")
-    if have("stop_times", "stops"):
-        out["stop_times_unknown_stop"] = _anti_count(
-            t["stop_times"], t["stops"], "stop_id", "stop_id")
-    if have("trips", "routes"):
-        out["trips_unknown_route"] = _anti_count(
-            t["trips"], t["routes"], "route_id", "route_id")
-    if "trips" in t and ("calendar" in t or "calendar_dates" in t):
-        dims = [t[n].select("service_id")
-                for n in ("calendar", "calendar_dates") if n in t]
-        svc = dims[0] if len(dims) == 1 else dims[0].unionByName(dims[1])
-        out["trips_unknown_service"] = _anti_count(
-            t["trips"], svc, "service_id", "service_id")
-    if "trips" in t and "shape_id" in t["trips"].columns:
-        if "shapes" in t:
-            out["trips_unknown_shape"] = _anti_count(
-                t["trips"], t["shapes"], "shape_id", "shape_id")
-        else:
-            # shapes.txt absent is legal ONLY while no trip references a
-            # shape: every non-empty shape_id is then a dangling ref
-            out["trips_unknown_shape"] = (
-                t["trips"].filter(
-                    F.col("shape_id").isNotNull() & (F.col("shape_id") != "")
-                ).count()
-            )
-    if have("routes", "agency"):
-        out["routes_unknown_agency"] = _anti_count(
-            t["routes"], t["agency"], "agency_id", "agency_id")
-
-    # sequence integrity
+    # dangling references (OTP load errors) and field validity
     if "stop_times" in t:
-        st = t["stop_times"]
-        out["stop_times_duplicate_sequence"] = (
-            st.groupBy("trip_id", "stop_sequence").count()
-            .filter(F.col("count") > 1).count()
-        )
-        # field validity
-        out["stop_times_bad_time"] = st.filter(
-            ~F.col("arrival_time").rlike(_TIME_RE)
-            | ~F.col("departure_time").rlike(_TIME_RE)
-        ).count()
-        # try_cast, not cast: a malformed time (already counted by
-        # stop_times_bad_time) must NULL out of this comparison, not
-        # ANSI-throw the whole validation
-        out["stop_times_departure_before_arrival"] = st.filter(
-            F.split("departure_time", ":")[0].try_cast("int") * 3600
-            + F.split("departure_time", ":")[1].try_cast("int") * 60
-            + F.split("departure_time", ":")[2].try_cast("int")
-            < F.split("arrival_time", ":")[0].try_cast("int") * 3600
-            + F.split("arrival_time", ":")[1].try_cast("int") * 60
-            + F.split("arrival_time", ":")[2].try_cast("int")
-        ).count()
+        refs = {}
+        if "trips" in t:
+            refs["stop_times_unknown_trip"] = (t["trips"], "trip_id")
+        if "stops" in t:
+            refs["stop_times_unknown_stop"] = (t["stops"], "stop_id")
+        count_rules("stop_times", refs, {
+            "stop_times_bad_time": ~F.col("arrival_time").rlike(_TIME_RE)
+            | ~F.col("departure_time").rlike(_TIME_RE),
+            "stop_times_departure_before_arrival":
+                _seconds("departure_time") < _seconds("arrival_time"),
+        })
+        # sequence integrity
+        counters.append(_duplicate_count(
+            t["stop_times"], "stop_times_duplicate_sequence",
+            "trip_id", "stop_sequence"))
+    if "trips" in t:
+        refs, rules = {}, {}
+        if "stop_times" in t:
+            refs["trips_without_stop_times"] = (t["stop_times"], "trip_id")
+        if "routes" in t:
+            refs["trips_unknown_route"] = (t["routes"], "route_id")
+        svc = [t[n].select("service_id")
+               for n in ("calendar", "calendar_dates") if n in t]
+        if svc:
+            refs["trips_unknown_service"] = (
+                svc[0] if len(svc) == 1 else svc[0].unionByName(svc[1]),
+                "service_id")
+        if "shape_id" in t["trips"].columns:
+            if "shapes" in t:
+                refs["trips_unknown_shape"] = (t["shapes"], "shape_id")
+            else:
+                # shapes.txt absent is legal ONLY while no trip references
+                # a shape: every non-empty shape_id is then a dangling ref
+                rules["trips_unknown_shape"] = _present("shape_id")
+        count_rules("trips", refs, rules)
+    if "routes" in t and "agency" in t:
+        count_rules("routes",
+                    {"routes_unknown_agency": (t["agency"], "agency_id")}, {})
     if "shapes" in t:
-        out["shapes_duplicate_sequence"] = (
-            t["shapes"].groupBy("shape_id", "shape_pt_sequence").count()
-            .filter(F.col("count") > 1).count()
-        )
+        counters.append(_duplicate_count(
+            t["shapes"], "shapes_duplicate_sequence",
+            "shape_id", "shape_pt_sequence"))
     if "stops" in t:
-        out["stops_bad_coordinates"] = t["stops"].filter(
-            (F.col("stop_lat").try_cast("double").isNull())
-            | (F.col("stop_lon").try_cast("double").isNull())
-            | (F.abs(F.col("stop_lat").try_cast("double")) > 90.0)
-            | (F.abs(F.col("stop_lon").try_cast("double")) > 180.0)
-        ).count()
+        lat = F.col("stop_lat").try_cast("double")
+        lon = F.col("stop_lon").try_cast("double")
+        count_rules("stops", {}, {
+            "stops_bad_coordinates": lat.isNull() | lon.isNull()
+            | (F.abs(lat) > 90.0) | (F.abs(lon) > 180.0),
+        })
+
+    if counters:
+        row = counters[0]
+        for c in counters[1:]:
+            row = row.crossJoin(c)
+        out.update((k, int(v)) for k, v in row.collect()[0].asDict().items())
     return out

@@ -323,34 +323,20 @@ def _bus_trips_and_times(
 
 
 def calendar_table(spark: SparkSession) -> DataFrame:
-    """calendar.txt literal (generate_gtfs.py:450-463)."""
-    row = [("everyday", 1, 1, 1, 1, 1, 1, 1, "20250101", "20991231")]
-    return spark.createDataFrame(
-        row,
-        "service_id string, monday int, tuesday int, wednesday int, thursday int, "
-        "friday int, saturday int, sunday int, start_date string, end_date string",
+    """calendar.txt literal (generate_gtfs.py:450-463).  An inline VALUES
+    table plans as a one-partition LocalTableScan; createDataFrame over a
+    Python list would ship the row through a Python RDD split over every
+    core (one task per core, empty part files for all but one)."""
+    return spark.sql(
+        "SELECT * FROM VALUES ('everyday', 1, 1, 1, 1, 1, 1, 1, '20250101', "
+        "'20991231') AS calendar(service_id, monday, tuesday, wednesday, "
+        "thursday, friday, saturday, sunday, start_date, end_date)"
     )
 
 
-def build_gtfs(
-    spark: SparkSession, ref_root: str, on_shapes=None, on_cached=None
-) -> dict[str, DataFrame]:
+def build_gtfs(spark: SparkSession, ref_root: str) -> dict[str, DataFrame]:
     """The full DAG: routes.json + geojson + schedule CSVs → seven GTFS
-    tables (generate_gtfs.py:477-521).
-
-    `on_shapes` (optional callback) receives the persisted shapes frame as
-    soon as its plan exists — a driver can submit its materialization job
-    there so the shape computation overlaps the (driver-side, py4j-bound)
-    construction of the remaining table plans instead of serializing after
-    it.  Plan construction and cluster execution are independent resources;
-    overlapping them is free latency.
-
-    `on_cached` (optional callback) generalizes the same trick to EVERY
-    persisted upstream: it receives (name, frame) for catalog and
-    stops_raw the moment each plan exists, so a driver can warm all three
-    shared caches concurrently with plan construction instead of paying
-    for them inside whichever output job touches them first.
-    """
+    tables (generate_gtfs.py:477-521)."""
     raw = read_routes_json(spark, f"{ref_root}/routes.json")
     # construct each unnest level ONCE and thread it through — rebuilding
     # categories/fixed_groups per consumer triples the driver-side plan
@@ -366,17 +352,11 @@ def build_gtfs(
     catalog = route_catalog(
         spark, f"{ref_root}/routes.json", raw=raw, groups=grps
     ).persist()
-    if on_cached is not None:
-        on_cached("catalog", catalog)
     stops_raw = read_stops(spark, f"{ref_root}/route-data/geojson").persist()
-    if on_cached is not None:
-        on_cached("stops_raw", stops_raw)
     vertices = read_way_vertices(spark, f"{ref_root}/route-data/geojson")
     schedule = read_schedule_long(spark, f"{ref_root}/route-data/schedule")
 
     shapes = build_shapes_table(catalog, vertices).persist()
-    if on_shapes is not None:
-        on_shapes(shapes)
     shaped_rels = shapes.select("relation_id", "shape_id").distinct()
 
     # The remaining table plans are independent of one another — construct
